@@ -3,13 +3,10 @@ package graft.sources
 import java.util.concurrent.ConcurrentHashMap
 import java.util.{Collections => JCollections, UUID}
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
-import org.apache.parquet.schema.{MessageType, MessageTypeParser}
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.io.api.RecordConsumer
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -259,15 +256,46 @@ object CowStore {
   def ndvHash(v: Any): Long = v match {
     case l: Long   => mix64(l)
     case d: Double => mix64(java.lang.Double.doubleToLongBits(d))
-    case s: String =>
-      // FNV-1a 64 over UTF-8 bytes, then mixed.
-      var h = 0xcbf29ce484222325L
-      val bs = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      var i = 0
-      while (i < bs.length) { h ^= bs(i) & 0xffL; h *= 0x100000001b3L; i += 1 }
-      mix64(h)
+    case s: String => ndvHashUtf8(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     case other => throw new IllegalArgumentException(
       s"graft-cow: unsupported ndv value $other")
+  }
+
+  /** A string's NDV hash from its UTF-8 bytes: FNV-1a 64, then mixed. */
+  def ndvHashUtf8(bs: Array[Byte]): Long = {
+    var h = 0xcbf29ce484222325L
+    var i = 0
+    while (i < bs.length) { h ^= bs(i) & 0xffL; h *= 0x100000001b3L; i += 1 }
+    mix64(h)
+  }
+
+  /** One column's KMV sketch while a file is written: the (at most
+    * [[NdvK]]) smallest distinct hashes, kept sorted unsigned in a
+    * primitive array. Once full, a hash above the current kth is
+    * rejected with one comparison.
+    */
+  final class KmvSketch {
+    private val hs = new Array[Long](NdvK)
+    private var n = 0
+
+    def add(h: Long): Unit =
+      if (n < NdvK || java.lang.Long.compareUnsigned(h, hs(n - 1)) < 0) {
+        var lo = 0
+        var hi = n
+        while (lo < hi) {
+          val mid = (lo + hi) >>> 1
+          if (java.lang.Long.compareUnsigned(hs(mid), h) < 0) lo = mid + 1 else hi = mid
+        }
+        if (lo == n || hs(lo) != h) {
+          val last = if (n < NdvK) n else n - 1
+          System.arraycopy(hs, lo, hs, lo + 1, last - lo)
+          hs(lo) = h
+          if (n < NdvK) n += 1
+        }
+      }
+
+    /** The sketch, ascending unsigned (the manifest's order). */
+    def hashes: Vector[Long] = hs.iterator.take(n).toVector
   }
 
   /** Merge per-file sketches (k smallest distinct, unsigned) and
@@ -276,16 +304,12 @@ object CowStore {
     * smallest hash as a fraction of 2^64.
     */
   def kmvMergeEstimate(sketches: Iterable[Vector[Long]]): Long = {
-    val set = new java.util.TreeSet[java.lang.Long](
-      (a: java.lang.Long, b: java.lang.Long) =>
-        java.lang.Long.compareUnsigned(a, b))
-    sketches.foreach(_.foreach { h =>
-      set.add(h)
-      if (set.size > NdvK) set.pollLast(): Unit
-    })
-    if (set.size < NdvK) set.size.toLong
+    val union = new KmvSketch
+    sketches.foreach(_.foreach(union.add))
+    val hs = union.hashes
+    if (hs.size < NdvK) hs.size.toLong
     else {
-      val kth = set.last().longValue()
+      val kth = hs.last
       // R = kth / 2^64 as a double in (0, 1]; est = (k-1)/R.
       val r = (kth >>> 11).toDouble / (1L << 53).toDouble
       if (r <= 0d) NdvK.toLong else math.max(NdvK.toLong,
@@ -1549,13 +1573,18 @@ object CowStore {
     */
   private def writeEqDeleteFile(dir: String, keys: Vector[String]): String = {
     val path = s"$dir/eqdel-${UUID.randomUUID().toString}.parquet"
-    val parsed = MessageTypeParser.parseMessageType(EqDeleteFileSchema)
-    val writer = ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(path))
-      .withType(parsed).withConf(new Configuration()).build()
-    val factory = new SimpleGroupFactory(parsed)
-    try keys.foreach(k => writer.write(factory.newGroup().append("key", k)))
-    finally writer.close()
+    val writer = CowParquet.writer(path,
+        MessageTypeParser.parseMessageType(EqDeleteFileSchema)) { (row, rc) =>
+      rc.startField("key", 0)
+      rc.addBinary(org.apache.parquet.io.api.Binary.fromReusedByteArray(
+        row.getUTF8String(0).getBytes))
+      rc.endField("key", 0)
+    }
+    val row = new GenericInternalRow(1)
+    try keys.foreach { k =>
+      row.update(0, UTF8String.fromString(k))
+      writer.write(row)
+    } finally writer.close()
     path
   }
 
@@ -4811,8 +4840,9 @@ class CowScanBuilder(tableName: String, state: CowStore.State,
       state.schema.fields.filter(f => requiredSchema.fieldNames.contains(f.name)) ++
         requiredSchema.fields.filter(f => isMeta(f.name)))
 
-  /** File-skipping pushdown: comparisons on long columns are retained
-    * for [[CowScan]]'s min/max pruning, and predicates on PARTITION
+  /** File-skipping pushdown: comparisons and IN lists on long,
+    * timestamp, string and double columns are retained for
+    * [[CowScan]]'s min/max pruning, and predicates on PARTITION
     * SOURCE columns are retained for plan-time partition pruning — but
     * EVERY filter is also returned as residual: pruning drops whole
     * files, Spark still evaluates the predicate on surviving rows, so a
@@ -4841,6 +4871,8 @@ class CowScanBuilder(tableName: String, state: CowStore.State,
       case GreaterThanOrEqual(c, v) => ok(c, v)
       case LessThan(c, v)           => ok(c, v)
       case LessThanOrEqual(c, v)    => ok(c, v)
+      // IN keeps a file when any of its literals could match (CowScan).
+      case In(c, vs) => vs.forall(ok(c, _))
       case _ => false
     }
     // Spec evolution: a predicate on a column ANY spec (current or
@@ -5064,8 +5096,9 @@ class CowScan(tableName: String, state: CowStore.State,
   import org.apache.spark.sql.connector.expressions.filter.Predicate
 
   /** STATIC file skipping from write-time stats: drop files whose
-    * per-column [min, max] cannot satisfy the pushed conjunction. A file
-    * without stats (or without a range for the column) is kept.
+    * per-column [min, max] cannot satisfy the pushed conjunction (an IN
+    * list keeps a file when any of its literals could). A file without
+    * stats (or without a range for the column) is kept.
     */
   private def surviveSkipping(f: String): Boolean =
     state.stats.get(f).forall { fs =>
@@ -5091,9 +5124,16 @@ class CowScan(tableName: String, state: CowStore.State,
       def drng(c: String) = phys(c).flatMap(fs.dblRanges.get)
       def dKeep(c: String, v: Double, keep: ((Double, Double)) => Boolean) =
         v.isNaN || drng(c).forall(keep)
+      // Could column `c` hold the literal `v`? Literals of no supported
+      // type (null included) keep the file.
+      def eqKeep(c: String, v: Any): Boolean = v match {
+        case v: String => sKeep(c, v, { case (lo, hi) => lo <= v && v <= hi })
+        case v: java.lang.Double => dKeep(c, v, { case (lo, hi) => lo <= v && v <= hi })
+        case v => mic(v).forall(m => rng(c).forall(r => r.min <= m && m <= r.max))
+      }
       skipFilters.forall {
-        case EqualTo(c, v: String) =>
-          sKeep(c, v, { case (lo, hi) => lo <= v && v <= hi })
+        case EqualTo(c, v) => eqKeep(c, v)
+        case In(c, vs) => vs.exists(eqKeep(c, _))
         case GreaterThan(c, v: String) =>
           sKeep(c, v, { case (_, hi) => hi > v })
         case GreaterThanOrEqual(c, v: String) =>
@@ -5102,8 +5142,6 @@ class CowScan(tableName: String, state: CowStore.State,
           sKeep(c, v, { case (lo, _) => lo < v })
         case LessThanOrEqual(c, v: String) =>
           sKeep(c, v, { case (lo, _) => lo <= v })
-        case EqualTo(c, v: java.lang.Double) =>
-          dKeep(c, v, { case (lo, hi) => lo <= v && v <= hi })
         case GreaterThan(c, v: java.lang.Double) =>
           dKeep(c, v, { case (_, hi) => hi > v })
         case GreaterThanOrEqual(c, v: java.lang.Double) =>
@@ -5112,8 +5150,6 @@ class CowScan(tableName: String, state: CowStore.State,
           dKeep(c, v, { case (lo, _) => lo < v })
         case LessThanOrEqual(c, v: java.lang.Double) =>
           dKeep(c, v, { case (lo, _) => lo <= v })
-        case EqualTo(c, v) =>
-          mic(v).forall(m => rng(c).forall(r => r.min <= m && m <= r.max))
         case GreaterThan(c, v) =>
           mic(v).forall(m => rng(c).forall(_.max > m))
         case GreaterThanOrEqual(c, v) =>
@@ -5846,10 +5882,7 @@ object CowEqDeleteFiles {
 
   /** The canonical-string keys of one delete file (cached). */
   def keys(path: String): Array[String] = cached(fileCache, path) {
-    val conf = new Configuration()
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA, CowStore.EqDeleteFileSchema)
-    val reader = ParquetReader.builder(new GroupReadSupport(),
-      new org.apache.hadoop.fs.Path(path)).withConf(conf).build()
+    val reader = CowParquet.groupReader(path, CowStore.EqDeleteFileSchema)
     val out = Array.newBuilder[String]
     try {
       var g = reader.read()
@@ -5902,8 +5935,11 @@ object CowEqDeleteFiles {
   * equality deletes stay vectorized too: survivors are compacted
   * through a per-batch selection vector ([[columnarReader]]), so one
   * deleted row no longer demotes a whole scan to the row walk (the
-  * round-16 verdict's weak mark). The per-row Group walk remains only
-  * as the A/B baseline (`-Dgraft.cow.columnar=false`) and for the
+  * round-16 verdict's weak mark). Both paths open the file from the
+  * shared per-JVM Hadoop conf ([[CowParquet]]); the vectorized reader is
+  * split-initialised from a copy of it carrying the requested schema.
+  * The per-row Group walk remains behind `-Dgraft.cow.columnar=false`,
+  * as the reference read specs hold the vectorized path to, and for the
   * compaction reader's internal use.
   */
 case class CowReaderFactory(schema: StructType, tableSchema: StructType,
@@ -5940,24 +5976,18 @@ case class CowReaderFactory(schema: StructType, tableSchema: StructType,
   /** The parquet columns this file must decode for `schema`, as
     * (required field, PHYSICAL column name) pairs — the physical name is
     * the file's write-time name for the field's id (rename resolution).
-    * When no requested data column is physically present (count(*)
-    * scans, `_file`/`_pos`-only reads, all-new-column projections), the
-    * narrowest present column drives row iteration.
+    * Empty when no requested data column is physically present (count(*)
+    * scans, `_file`/`_pos`-only reads, all-new-column projections): the
+    * readers then count rows with no column decoded, so no column is
+    * ever requested under a type other than the one its identity was
+    * written with (a required name can coincide with a physical name
+    * whose identity the file lacks — rename→re-add — and of another type).
     */
-  private def physicalFields(part: CowFilePartition): Array[(StructField, String)] = {
-    val data = schema.fields.flatMap { f =>
+  private def physicalFields(part: CowFilePartition): Array[(StructField, String)] =
+    schema.fields.flatMap { f =>
       if (f.name == CowFileColumn.Name || f.name == CowPosColumn.Name) None
       else part.physOf(f.name).map(f -> _)
     }
-    if (data.nonEmpty) data
-    // The sentinel field name keeps the iteration driver from ever being
-    // mistaken for a required column (a required name can COINCIDE with
-    // a physical name whose identity the file lacks — rename→re-add —
-    // and must read NULL, not the driver column's values).
-    else tableSchema.fields
-      .filter(f => part.presentCols.contains(f.name))
-      .take(1).map(f => f.copy(name = "\u0000driver") -> f.name)
-  }
 
   override def supportColumnarReads(partition: InputPartition): Boolean =
     columnar
@@ -6015,8 +6045,19 @@ case class CowReaderFactory(schema: StructType, tableSchema: StructType,
       private val rr =
         new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
           null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, Capacity)
-      rr.initialize(part.file,
-        java.util.Arrays.asList(phys.map(_._2).toIndexedSeq: _*))
+      // Opened from a copy of the shared conf (the path overload parses a
+      // fresh one per file). The requested schema names the physical
+      // columns in `phys` order, typed as the writer laid them out.
+      locally {
+        val conf = CowParquet.vectorizedConf(StructType(phys.map {
+          case (f, p) => StructField(p, f.dataType) }))
+        val path = new org.apache.hadoop.fs.Path(part.file)
+        val len = path.getFileSystem(conf).getFileStatus(path).getLen
+        rr.initialize(
+          new org.apache.hadoop.mapred.FileSplit(path, 0L, len, Array.empty[String]),
+          new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+            conf, new org.apache.hadoop.mapreduce.TaskAttemptID()))
+      }
       rr.initBatch(new StructType(), new GenericInternalRow(0))
       private val parquetBatch = rr.resultBatch()
       private var wrapped: ColumnarBatch = _
@@ -6061,10 +6102,9 @@ case class CowReaderFactory(schema: StructType, tableSchema: StructType,
       // merge-walk relies on).
       private def buildWrapper(): ColumnarBatch = {
         // Required name → parquet batch index VIA the field-id-resolved
-        // physical name: when `phys` fell back to an iteration-driver
-        // column, no schema field maps to it (a physical name can
-        // coincide with a required name whose IDENTITY the file lacks —
-        // rename→re-add — and must still read NULL).
+        // physical name (a physical name can coincide with a required
+        // name whose IDENTITY the file lacks — rename→re-add — and must
+        // still read NULL).
         val physIdx = phys.map(_._2).zipWithIndex.toMap
         val dataIdx: Map[String, Int] = schema.fields.flatMap { f =>
           part.physOf(f.name).flatMap(physIdx.get).map(f.name -> _)
@@ -6257,19 +6297,15 @@ case class CowReaderFactory(schema: StructType, tableSchema: StructType,
       }.mkString("message graft_cow_projection {\n", "\n", "\n}")
 
     // Required field → its physical name in this file, null = serve NULL
-    // (the fallback iteration-driver column maps to no required field).
+    // (the equality-key ride-along maps to no required field).
     val physNames: Array[String] = {
       val m = phys.map { case (f, p) => f.name -> p }.toMap
       schema.fields.map(f => m.getOrElse(f.name, null))
     }
 
     new PartitionReader[InternalRow] {
-      private val reader: ParquetReader[Group] = {
-        val conf = new Configuration()
-        conf.set(ReadSupport.PARQUET_READ_SCHEMA, parquetProjection)
-        ParquetReader.builder(new GroupReadSupport(),
-          new org.apache.hadoop.fs.Path(file)).withConf(conf).build()
-      }
+      private val reader: ParquetReader[Group] =
+        CowParquet.groupReader(file, parquetProjection)
       private var current: Group = _
       private var pos = -1L // physical position of `current` within the file
       private var di = 0    // merge-walk pointer into the sorted delete vector
@@ -6761,12 +6797,14 @@ case class CowEqDeltaWriterFactory(dir: String, writeSchema: StructType,
     }
 }
 
-/** One task's parquet output file: the Group-API writer + write-time
-  * stats collection shared by the group-based (COW) and delta-based (MOR)
-  * write paths. Rows are extracted by `writeSchema` position (plus a
-  * caller-supplied lead offset, see [[CowWriterFactory]]); the file is
-  * always laid out in table-schema shape. A zero-row task deletes its
-  * just-opened file and contributes nothing.
+/** One task's parquet output file, shared by the group-based (COW) and
+  * delta-based (MOR) write paths. Each row goes straight to parquet's
+  * `RecordConsumer` ([[CowParquet.writer]]), and the file's write-time
+  * stats are collected in the same pass over its fields. Rows are
+  * extracted by `writeSchema` position (plus a caller-supplied lead
+  * offset, see [[CowWriterFactory]]); the file is always laid out in
+  * table-schema shape. A zero-row task deletes its just-opened file and
+  * contributes nothing.
   */
 private[sources] final class CowTaskFile(dir: String, writeSchema: StructType,
                                          tableSchema: StructType,
@@ -6789,12 +6827,8 @@ private[sources] final class CowTaskFile(dir: String, writeSchema: StructType,
       s"  optional $t ${f.name}$ann;"
     }.mkString("message graft_cow_write {\n", "\n", "\n}")
 
+  private val names: Array[String] = tableSchema.fieldNames
   private val file = s"$dir/data-${UUID.randomUUID().toString}.parquet"
-  private val parsed: MessageType = MessageTypeParser.parseMessageType(messageType)
-  private val factory = new SimpleGroupFactory(parsed)
-  private val writer: ParquetWriter[Group] =
-    ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(file))
-      .withType(parsed).withConf(new Configuration()).build()
   // table column -> position in the DECLARED write schema, resolved once.
   private val srcIdx: Array[Int] = tableSchema.fields.map { f =>
     val i = writeSchema.fieldIndex(f.name)
@@ -6804,109 +6838,96 @@ private[sources] final class CowTaskFile(dir: String, writeSchema: StructType,
     i
   }
   private var rows = 0L
-  // Write-time per-long-column ranges: the file's manifest stats,
-  // collected as rows stream through — zero extra passes. Timestamp
-  // columns range over their internal epoch micros (same long domain
-  // pushed filters normalize into — see CowStore.filterMicros).
-  private val longIdx: Array[Int] =
-    tableSchema.fields.indices.filter { i =>
-      val dt = tableSchema.fields(i).dataType
-      dt == LongType || dt == TimestampType
-    }.toArray
-  private val statsSlot: Array[Int] =
-    tableSchema.fields.indices.map(longIdx.indexOf(_)).toArray
+  private var off = 0 // lead offset of the row being written
+
+  // Write-time stats, collected as rows stream through — zero extra
+  // passes. `slot(t)` indexes column t's entry in the arrays of its
+  // type. Long and timestamp columns range over their internal values
+  // (timestamps in the epoch-micros domain pushed filters normalize
+  // into — see CowStore.filterMicros).
+  private def colsOf(p: DataType => Boolean): Array[Int] =
+    tableSchema.fields.indices.filter(i => p(tableSchema.fields(i).dataType)).toArray
+  private val longIdx = colsOf(dt => dt == LongType || dt == TimestampType)
+  private val dblIdx = colsOf(_ == DoubleType)
+  private val strIdx = colsOf(_ == StringType)
+  private val slot: Array[Int] = tableSchema.fields.indices.map { t =>
+    math.max(longIdx.indexOf(t), math.max(dblIdx.indexOf(t), strIdx.indexOf(t)))
+  }.toArray
   private val mins = Array.fill(longIdx.length)(Long.MaxValue)
   private val maxs = Array.fill(longIdx.length)(Long.MinValue)
-  // String bounds: ASCII-only (see FileStats.strRanges); one non-ASCII
-  // value disables the column's range for this file.
-  private val strIdx: Array[Int] =
-    tableSchema.fields.indices.filter(
-      i => tableSchema.fields(i).dataType == StringType).toArray
-  private val strSlot: Array[Int] =
-    tableSchema.fields.indices.map(strIdx.indexOf(_)).toArray
-  private val smins = Array.fill[String](strIdx.length)(null)
-  private val smaxs = Array.fill[String](strIdx.length)(null)
-  private val strOk = Array.fill(strIdx.length)(true)
   // Double bounds: disabled for the file by any NaN (see
   // FileStats.dblRanges).
-  private val dblIdx: Array[Int] =
-    tableSchema.fields.indices.filter(
-      i => tableSchema.fields(i).dataType == DoubleType).toArray
-  private val dblSlot: Array[Int] =
-    tableSchema.fields.indices.map(dblIdx.indexOf(_)).toArray
   private val dmins = Array.fill(dblIdx.length)(Double.PositiveInfinity)
   private val dmaxs = Array.fill(dblIdx.length)(Double.NegativeInfinity)
   private val dblOk = Array.fill(dblIdx.length)(true)
-  // CBO column stats: per-column null counts + KMV NDV sketches (k
-  // smallest distinct unsigned hashes; O(1) append once warm — values
-  // above the current kth are rejected without a tree op).
-  private val nullCounts = Array.fill(tableSchema.fields.length)(0L)
-  private val ndvSets: Array[java.util.TreeSet[java.lang.Long]] =
-    Array.fill(tableSchema.fields.length)(
-      new java.util.TreeSet[java.lang.Long](
-        (a: java.lang.Long, b: java.lang.Long) =>
-          java.lang.Long.compareUnsigned(a, b)))
-  private def ndvAdd(t: Int, h: Long): Unit = {
-    val set = ndvSets(t)
-    if (set.size < CowStore.NdvK) set.add(h): Unit
-    else if (java.lang.Long.compareUnsigned(h, set.last()) < 0) {
-      set.add(h)
-      if (set.size > CowStore.NdvK) set.pollLast(): Unit
+  // String bounds, as UTF-8 bytes: ASCII-only (see FileStats.strRanges),
+  // where byte order is string order; one non-ASCII value disables the
+  // column's range for this file.
+  private val smins = new Array[Array[Byte]](strIdx.length)
+  private val smaxs = new Array[Array[Byte]](strIdx.length)
+  private val strOk = Array.fill(strIdx.length)(true)
+  // CBO column stats: per-column null counts + KMV NDV sketches.
+  private val nullCounts = new Array[Long](names.length)
+  private val ndv = Array.fill(names.length)(new CowStore.KmvSketch)
+
+  private val writer =
+    CowParquet.writer(file, MessageTypeParser.parseMessageType(messageType))(fill)
+
+  private def fill(row: InternalRow, rc: RecordConsumer): Unit = {
+    var t = 0
+    while (t < names.length) {
+      val i = off + srcIdx(t)
+      if (row.isNullAt(i)) nullCounts(t) += 1
+      else {
+        val s = slot(t)
+        rc.startField(names(t), t)
+        tableSchema.fields(t).dataType match {
+          case LongType | TimestampType =>
+            val v = row.getLong(i) // timestamp = internal epoch micros
+            if (v < mins(s)) mins(s) = v
+            if (v > maxs(s)) maxs(s) = v
+            ndv(t).add(CowStore.mix64(v))
+            rc.addLong(v)
+          case DoubleType =>
+            val v = row.getDouble(i)
+            if (dblOk(s)) {
+              if (v.isNaN) dblOk(s) = false
+              else {
+                if (v < dmins(s)) dmins(s) = v
+                if (v > dmaxs(s)) dmaxs(s) = v
+              }
+            }
+            ndv(t).add(CowStore.mix64(java.lang.Double.doubleToLongBits(v)))
+            rc.addDouble(v)
+          case _ => // StringType: messageType admits no other
+            val u = row.getUTF8String(i)
+            val bs = u.getBytes
+            if (strOk(s)) {
+              var ci = 0
+              while (ci < bs.length && bs(ci) >= 0) ci += 1
+              if (ci < bs.length) strOk(s) = false
+              else {
+                // `getBytes` hands out the string's own array when it
+                // spans all of it; keep a bound only in an array of ours.
+                def own = if (bs eq u.getBaseObject) bs.clone() else bs
+                if (smins(s) == null || java.util.Arrays.compare(bs, smins(s)) < 0)
+                  smins(s) = own
+                if (smaxs(s) == null || java.util.Arrays.compare(bs, smaxs(s)) > 0)
+                  smaxs(s) = own
+              }
+            }
+            ndv(t).add(CowStore.ndvHashUtf8(bs))
+            rc.addBinary(org.apache.parquet.io.api.Binary.fromReusedByteArray(bs))
+        }
+        rc.endField(names(t), t)
+      }
+      t += 1
     }
   }
 
   def write(row: InternalRow, off: Int): Unit = {
-    val g = factory.newGroup()
-    var t = 0
-    while (t < tableSchema.fields.length) {
-      val i = off + srcIdx(t)
-      if (row.isNullAt(i)) nullCounts(t) += 1
-      else {
-        val f = tableSchema.fields(t)
-        f.dataType match {
-          case LongType | TimestampType =>
-            val v = row.getLong(i) // timestamp = internal epoch micros
-            val s = statsSlot(t)
-            if (v < mins(s)) mins(s) = v
-            if (v > maxs(s)) maxs(s) = v
-            ndvAdd(t, CowStore.mix64(v))
-            g.append(f.name, v)
-          case DoubleType =>
-            val v = row.getDouble(i)
-            val slot = dblSlot(t)
-            if (dblOk(slot)) {
-              if (v.isNaN) dblOk(slot) = false
-              else {
-                if (v < dmins(slot)) dmins(slot) = v
-                if (v > dmaxs(slot)) dmaxs(slot) = v
-              }
-            }
-            ndvAdd(t, CowStore.mix64(java.lang.Double.doubleToLongBits(v)))
-            g.append(f.name, v)
-          case StringType =>
-            val s = row.getUTF8String(i).toString
-            val slot = strSlot(t)
-            if (strOk(slot)) {
-              var ascii = true
-              var ci = 0
-              while (ascii && ci < s.length) {
-                if (s.charAt(ci) >= 128) ascii = false; ci += 1
-              }
-              if (!ascii) strOk(slot) = false
-              else {
-                if (smins(slot) == null || s < smins(slot)) smins(slot) = s
-                if (smaxs(slot) == null || s > smaxs(slot)) smaxs(slot) = s
-              }
-            }
-            ndvAdd(t, CowStore.ndvHash(s))
-            g.append(f.name, s)
-          case other => throw new IllegalArgumentException(
-            s"graft-cow: unsupported column type ${other.simpleString}")
-        }
-      }
-      t += 1
-    }
-    writer.write(g)
+    this.off = off
+    writer.write(row)
     rows += 1
   }
 
@@ -6922,23 +6943,22 @@ private[sources] final class CowTaskFile(dir: String, writeSchema: StructType,
     } else {
       val ranges = longIdx.indices.collect {
         case s if mins(s) <= maxs(s) =>
-          tableSchema.fields(longIdx(s)).name ->
-            CowStore.ColRange(mins(s), maxs(s))
+          names(longIdx(s)) -> CowStore.ColRange(mins(s), maxs(s))
       }.toMap
+      def str(bs: Array[Byte]) = new String(bs, java.nio.charset.StandardCharsets.UTF_8)
       val sranges = strIdx.indices.collect {
         case s if strOk(s) && smins(s) != null =>
-          tableSchema.fields(strIdx(s)).name -> (smins(s), smaxs(s))
+          names(strIdx(s)) -> (str(smins(s)), str(smaxs(s)))
       }.toMap
       val dranges = dblIdx.indices.collect {
         case s if dblOk(s) && dmins(s) <= dmaxs(s) =>
-          tableSchema.fields(dblIdx(s)).name -> (dmins(s), dmaxs(s))
+          names(dblIdx(s)) -> (dmins(s), dmaxs(s))
       }.toMap
-      import scala.jdk.CollectionConverters._
       Some(file -> CowStore.FileStats(
         rows, new java.io.File(file).length(), ranges,
-        tableSchema.fieldNames.toVector, partVals, specId, sranges,
+        names.toVector, partVals, specId, sranges,
         nullCounts = nullCounts.toVector,
-        ndv = ndvSets.toVector.map(_.asScala.toVector.map(_.longValue())),
+        ndv = ndv.toVector.map(_.hashes),
         dblRanges = dranges))
     }
   }

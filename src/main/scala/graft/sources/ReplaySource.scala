@@ -1,11 +1,8 @@
 package graft.sources
 
 import graft.streaming.StreamOps
-import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -305,17 +302,14 @@ class ReplayMicroBatchStream(path: String, maxFilesPerTrigger: Option[Int],
   * conversion to a timestamp happens in the query plan, same as the
   * file-source path).
   *
-  * The pruned schema is handed to parquet-mr as its requested projection
-  * (`parquet.read.schema`), so the reader decodes ONLY the requested
-  * columns' chunks — pruning at the I/O layer, not a post-read projection.
+  * The pruned schema is handed to parquet-mr's read support as its
+  * requested projection, so the reader decodes ONLY the requested
+  * columns' chunks — pruning at the I/O layer, not a post-read
+  * projection. Every micro-batch file opens from the shared per-JVM
+  * Hadoop conf ([[CowParquet.groupReader]]).
   */
 case class ReplayReaderFactory(schema: StructType) extends PartitionReaderFactory {
 
-  /** The read schema as a parquet projection message. Primitive names and
-    * repetition must match the staged files (Spark writes every column
-    * `optional`); logical annotations are not compared by parquet's
-    * projection check, so `binary` suffices for strings.
-    */
   /** Columns physically read: a column-less required schema (Spark pushes
     * StructType(Nil) for count(*)-style scans) still needs ONE parquet
     * column to drive row iteration — parquet rejects an empty group — so
@@ -325,6 +319,11 @@ case class ReplayReaderFactory(schema: StructType) extends PartitionReaderFactor
     if (schema.fields.isEmpty) StreamOps.eventsRawSchema.fields.take(1)
     else schema.fields
 
+  /** The read schema as a parquet projection message. Primitive names and
+    * repetition must match the staged files (Spark writes every column
+    * `optional`); logical annotations are not compared by parquet's
+    * projection check, so `binary` suffices for strings.
+    */
   private def parquetProjection: String =
     physicalFields.map { f =>
       val t = f.dataType match {
@@ -340,12 +339,8 @@ case class ReplayReaderFactory(schema: StructType) extends PartitionReaderFactor
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val file = partition.asInstanceOf[ReplayFilePartition].file
     new PartitionReader[InternalRow] {
-      private val reader: ParquetReader[Group] = {
-        val conf = new Configuration()
-        conf.set(ReadSupport.PARQUET_READ_SCHEMA, parquetProjection)
-        ParquetReader.builder(new GroupReadSupport(),
-          new org.apache.hadoop.fs.Path(file)).withConf(conf).build()
-      }
+      private val reader: ParquetReader[Group] =
+        CowParquet.groupReader(file, parquetProjection)
       private var current: Group = _
 
       override def next(): Boolean = {

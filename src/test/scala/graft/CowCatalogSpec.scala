@@ -1916,6 +1916,34 @@ class CowCatalogSpec extends SparkSpec {
       (0L until 10L by 2).map(_ * 2).sum)
   }
 
+  test("rename then re-add under a different type: the re-added name reads NULL from old files on both read paths") {
+    val tbl = fresh("renretype")
+    spark.sql(s"CREATE TABLE $tbl (a BIGINT) TBLPROPERTIES ('graft.mode' = 'mor')")
+    spark.sql(s"INSERT INTO $tbl SELECT id FROM range(0, 10, 1, 1)")
+    spark.sql(s"ALTER TABLE $tbl RENAME COLUMN a TO b")
+    // The old files hold a physical int64 `a` that is NOT this identity.
+    spark.sql(s"ALTER TABLE $tbl ADD COLUMN a STRING")
+    def check(rows: Long, sumB: Long): Unit = {
+      val as = spark.sql(s"SELECT a FROM $tbl").collect()
+      assert(as.length == rows && as.forall(_.isNullAt(0)),
+        "the re-added STRING `a` must read NULL, never the old int64 `a`")
+      assert(spark.sql(s"SELECT count(*) FROM $tbl").head.getLong(0) == rows)
+      assert(spark.sql(s"SELECT _file FROM $tbl").collect().length == rows)
+      assert(spark.sql(s"SELECT sum(b) FROM $tbl WHERE a IS NULL")
+        .head.getLong(0) == sumB)
+    }
+    def bothPaths(rows: Long, sumB: Long): Unit = {
+      check(rows, sumB)
+      sys.props("graft.cow.columnar") = "false"
+      try check(rows, sumB) finally sys.props.remove("graft.cow.columnar")
+    }
+    bothPaths(10L, 45L)
+    // A delete vector sends the columnar scan through the filtered
+    // (selection-vector) assembly with no decoded column.
+    spark.sql(s"DELETE FROM $tbl WHERE b = 4")
+    bothPaths(9L, 41L)
+  }
+
   test("vectorized reads: DV-free scans plan columnar batches; a delete vector drops the scan to the row walk; results identical") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -1976,7 +2004,7 @@ class CowCatalogSpec extends SparkSpec {
       "columnar and row-walk reads of a DV'd file must be identical")
     finally sys.props.remove("graft.cow.columnar")
     // Bare count on a DV'd table: the filtered columnar batch with ZERO
-    // output columns (the iteration-driver column decodes, nothing maps).
+    // output columns (no column decoded; rows are only counted).
     assert(spark.table(mor).count() == 9L,
       "a zero-column filtered columnar scan must count survivors")
     // optimize folds the DVs — still columnar, now unfiltered.
@@ -3640,6 +3668,35 @@ class CowCatalogSpec extends SparkSpec {
     val (sk, n) = skipped(s"SELECT id FROM $wo WHERE tag >= 'y'")
     assert(sk > 0, "ordered string writes must produce skippable bounds")
     assert(n == (0 until 2600).count(i => 97 + i % 26 >= 'y'.toInt))
+  }
+
+  test("IN lists skip files on long, string and double stats; a null literal keeps every file") {
+    val tbl = fresh("inskip")
+    spark.sql(s"CREATE TABLE $tbl (id BIGINT, tag STRING, x DOUBLE)")
+    // 3 single-file inserts with disjoint id, tag and x ranges.
+    for ((p, h) <- Seq("a" -> 0, "b" -> 1, "c" -> 2))
+      spark.sql(
+        s"""INSERT INTO $tbl
+           |SELECT /*+ COALESCE(1) */ id, concat('$p', CAST(id AS STRING)), id * 0.5D
+           |FROM range(${h * 10}, ${h * 10 + 10})""".stripMargin)
+    val skipRe = """(\d+) of (\d+) files, (\d+) skipped""".r
+    def skipped(where: String): (Int, Seq[Long]) = {
+      val df = spark.sql(s"SELECT id FROM $tbl WHERE $where")
+      val m = skipRe.findFirstMatchIn(df.queryExecution.executedPlan.toString).get
+      (m.group(3).toInt, df.collect().map(_.getLong(0)).sorted.toSeq)
+    }
+    assert(skipped("id IN (3, 5)") == (2, Seq(3L, 5L)))
+    assert(skipped("id IN (3, 25)") == (1, Seq(3L, 25L)))
+    assert(skipped("id IN (100, 200)") == (3, Seq.empty))
+    assert(skipped("tag IN ('b15', 'b16')") == (2, Seq(15L, 16L)))
+    assert(skipped("x IN (1.5D, 14.5D)") == (1, Seq(3L, 29L)))
+    // A null literal could match no row, yet it keeps every file.
+    assert(skipped("id IN (3, NULL)") == (0, Seq(3L)))
+    // DELETE with an IN list: same rows gone as the relational answer.
+    spark.sql(s"DELETE FROM $tbl WHERE id IN (4, 6, 27)")
+    assert(spark.table(tbl).collect().map(_.getLong(0)).sorted.toSeq ==
+      (0L until 30L).filterNot(Set(4L, 6L, 27L)))
+    assert(skipped("id IN (4, 5, 6)") == (2, Seq(5L)))
   }
 
   test("limit pushdown: a bare LIMIT plans only enough files to cover it") {
