@@ -8,34 +8,7 @@ object Bench {
     // silently dropping to a local[4] default and producing exponents
     // that measured the launch command. Override only deliberately.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Scan-split sizing stays at Spark's defaults ON PURPOSE: split
-      // width is already dynamic — min(maxPartitionBytes, max(openCost,
-      // totalBytes/defaultParallelism)) — so at local[32] every fixture
-      // up to ×40 stress (427 MB lineitem → ~18 MB splits ≈ 1 file/task
-      // over 40 files) scans with ~core-count tasks. A round-10 probe
-      // that forced 16 MB splits moved nothing at 32 cores; the serial
-      // scan it was chasing was an artifact of benching at local[4]
-      // (447 MB/4 ⇒ 128 MB splits ⇒ 4 tasks), i.e. a CORE-COUNT effect
-      // — which is why the artifact line below records cpus.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The library's session contract: custom functions, planner
-      // strategy, and the MERGE WITH SCHEMA EVOLUTION parser surface.
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Fork-free local filesystem (round 20): without libhadoop.so,
-      // Hadoop's RawLocalFileSystem shells out `chmod` on every create
-      // and `ls -ld` on every lazy permission read — ~84 ms per atomic
-      // checkpoint write ON TMPFS, paid per state store per micro-batch
-      // and per parquet part-file. Same semantics via java.nio; see
-      // graft.hadoop.GraftLocalFileSystem.
-      .config("spark.hadoop.fs.file.impl",
-        "graft.hadoop.GraftLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.hadoop.GraftLocalFs")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Scaling legibility (round-20 verdict item #2): at sf0.1 every query
     // sits on a ~0.3-0.5 s fixed-cost floor, so the driver's 8-vs-32-core
@@ -94,17 +67,9 @@ object Bench {
     }
     // Dev-loop filter (comma-separated names): bench one operator without
     // the full suite. Unset = the driver's full run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map { s =>
-      val names = s.split(",").toSet
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      // Same loud-failure contract as Verify's filter: a typo must not
-      // silently produce an empty (and apparently instant) bench run.
-      require(unknown.isEmpty,
-        s"unknown query names in SPARK_GRAFT_ONLY: ${unknown.toSeq.sorted.mkString(",")}")
-      names
-    }
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_(n)) }
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(SparkEntry.selectQueries(_, "SPARK_GRAFT_ONLY"))
+    val ordered = only.getOrElse(SparkEntry.queries).toSeq.sortBy(_._1)
     // Untimed warmup on the BENCHED dataset: session boot, codegen, parquet
     // reader, shuffle paths — otherwise whichever query runs first absorbs
     // ~5 s of one-off cost and numbers aren't comparable across rounds.
@@ -127,38 +92,8 @@ object Bench {
         System.err.println(s"[bench] $name staging failed: ${e.getMessage}")
       }
     }
-    // Replay staging is stream-source SETUP (writing the 2-file replay
-    // dir), not query work — pay it here once so the first streaming
-    // query's timing measures the stream, not the fixture copy.
-    staged("_stage_replay") {
-      graft.streaming.StreamOps.stageReplayDir(spark, sfDir): Unit
-    }
-    // Same contract for the file-format sources: staging the json/csv/orc
-    // copies of the fixture is one-time setup, not query work — unstaged,
-    // whichever of q_{json,csv,orc,text}_source ran first absorbed the
-    // conversion write and its number drifted round-to-round.
-    staged("_stage_file_formats") {
-      graft.sources.FileSources.stageAll(spark, sfDir)
-    }
-    // Graph-family staging: the two near-dup edge lists are session-pinned
-    // base relations (Tables.pinForSession) consumed by 15 registered
-    // queries — in production they are materialized tables written once.
-    // Building the pins here keeps each graph query's number the cost of
-    // its ALGORITHM, not the Nth rebuild of an identical edge list.
-    staged("_stage_graph_family") {
-      graft.operators.TextOps.stageGraphFamily(spark, sfDir)
-    }
-    // MV-family staging (round-19 optimization): the maintained-MV
-    // fixtures are session-shared base relations consumed by the four
-    // REWRITE-rule queries (q_mv_rewrite/avg/where/rollup) — in
-    // production the maintained gold aggregate is built once and every
-    // dashboard query reads it. Building them here keeps each rewrite
-    // query's number the cost of its ALGORITHM (register + substituted
-    // O(groups) gold read), not the Nth rebuild of an identical fixture.
-    // q_incremental_mv still builds its own fixture in-query: its
-    // declared algorithm IS the maintenance loop.
-    staged("_stage_mv_family") {
-      graft.streaming.StreamOps.stageMvFamily(spark, sfDir)
+    GraftSession.staging.foreach { case (name, stage) =>
+      staged(name)(stage(spark, sfDir))
     }
     val pass1 = ordered.map { case (n, f) => n -> timeOnce(n, f) }.toMap
     val results = ordered.flatMap { case (n, f) =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan of named registry queries —
   * the `.explain("formatted")` audit loop the scale notes are checked
@@ -9,26 +8,12 @@ import org.apache.spark.sql.SparkSession
 object ExplainCheck {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ExplainCheck <sfDir> <query>...")
-    // Mirror graft.Bench's session exactly (master, shuffle partitions,
-    // extensions): a plan captured here must be the plan the bench runs —
-    // the round-19 plan artifacts (plans/r19/*) are produced by this main.
+    // Bench's session and staging: a plan captured here must be the
+    // plan the bench times, including queries that read staged fixtures.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Fork-free local FS (round 20) - mirrors the bench session.
-      .config("spark.hadoop.fs.file.impl",
-        "graft.hadoop.GraftLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.hadoop.GraftLocalFs")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // Match the bench's staged environment so queries that consume the
-    // session pins / replay dirs explain the same plan they are timed on.
-    graft.streaming.StreamOps.stageReplayDir(spark, args.head): Unit
-    graft.sources.FileSources.stageAll(spark, args.head)
-    graft.operators.TextOps.stageGraphFamily(spark, args.head)
+    GraftSession.staging.foreach { case (_, stage) => stage(spark, args.head) }
     // Optional: write each plan to $SPARK_GRAFT_EXPLAIN_DIR/<query>.txt
     // (the committed plans/r19 artifacts) in addition to stdout.
     val outDir = sys.env.get("SPARK_GRAFT_EXPLAIN_DIR")

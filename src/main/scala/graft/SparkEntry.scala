@@ -45,6 +45,22 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.iterator.map(_._1).reduce(_ ++ _)
 
+  /** The registry entries named in `csv` (comma-separated), for the
+    * mains' dev-loop filters. An unknown name fails, listing every
+    * unknown name sorted: a typo would otherwise yield an empty run that
+    * looks instant in Bench and trivially green in Verify. `source` says
+    * where the list came from.
+    */
+  def selectQueries(csv: String,
+                    source: String): Map[String, (SparkSession, String) => DataFrame] = {
+    val names = csv.split(",").toSet
+    val all = queries
+    val unknown = names.diff(all.keySet)
+    require(unknown.isEmpty,
+      s"unknown query names in $source: ${unknown.toSeq.sorted.mkString(",")}")
+    all.view.filterKeys(names).toMap
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

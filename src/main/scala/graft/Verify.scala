@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,37 +9,14 @@ object Verify {
     // one operator can be re-dumped without the full 90-query sweep. The
     // manifest still lists only what ran, so local_verify compares just
     // the subset.
-    val only: Option[Set[String]] =
-      if (args.length > 2) {
-        val names = args(2).split(",").toSet
-        val unknown = names.diff(SparkEntry.queries.keySet)
-        // A typo'd name would otherwise yield an empty run, an empty
-        // manifest, and a trivially green gate — fail loudly instead.
-        require(unknown.isEmpty,
-          s"unknown query names in filter: ${unknown.toSeq.sorted.mkString(",")}")
-        Some(names)
-      } else None
+    val only =
+      if (args.length > 2) Some(SparkEntry.selectQueries(args(2), "filter"))
+      else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The library's session contract: custom functions, planner
-      // strategy, and the MERGE WITH SCHEMA EVOLUTION parser surface.
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Fork-free local FS (round 20) - see graft.hadoop.GraftLocalFileSystem.
-      .config("spark.hadoop.fs.file.impl",
-        "graft.hadoop.GraftLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.hadoop.GraftLocalFs")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.view.filterKeys(names).toMap
-      case None        => SparkEntry.queries
-    }
+    val selected = only.getOrElse(SparkEntry.queries)
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -62,7 +38,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql.view
-      .filterKeys(k => only.forall(_(k))).toMap
+      .filterKeys(k => only.forall(_.contains(k))).toMap
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Manifest of every SELECTED query (the full registry when no filter

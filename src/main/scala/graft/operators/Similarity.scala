@@ -447,8 +447,9 @@ object Similarity {
     * occupancy ~ n/2^rows under near-uniform sign bits, and per-band
     * candidate mass is Σ bucket² ≈ n·occupancy — so holding occupancy
     * ≤ this constant holds candidate mass ~LINEAR in n (the
-    * `graft.LshGeomProbe` measurement: fixed (4,4) at ×10 data → ×100
-    * candidates, 9.3 s; compensated (2,8) → ×3.4 candidates, flat wall).
+    * BASELINE.md "Round-12/14 scaling anchors", `q_cosine_neardup`:
+    * fixed (4,4) at ×10 data → ×100 candidates, 9.3 s; compensated
+    * (2,8) → ×3.4 candidates, flat wall).
     */
   val NdTargetOcc = 256L
 

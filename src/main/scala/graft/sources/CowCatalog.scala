@@ -534,9 +534,6 @@ object CowStore {
     if (snap.eqDeletes.isEmpty) return Array.empty
     val fs = st.stats.get(f)
     val seq = fs.map(_.seq).getOrElse(0L)
-    // `-Dgraft.cow.eqprune=false` is EqPruneProbe's A/B knob (the
-    // graft.cow.columnar pattern), not a supported config.
-    val prune = !sys.props.get("graft.cow.eqprune").contains("false")
     val physKey = for {
       s <- fs
       key <- st.eqKey
@@ -554,12 +551,12 @@ object CowStore {
       .filter(_.version > seq)
       .filter { e =>
         val longMiss = (e.keyMin, e.keyMax, fileRange) match {
-          case (Some(lo), Some(hi), Some((flo, fhi))) if prune =>
+          case (Some(lo), Some(hi), Some((flo, fhi))) =>
             hi < flo || lo > fhi
           case _ => false
         }
         val strMiss = (e.strMin, e.strMax, fileStrRange) match {
-          case (Some(lo), Some(hi), Some((flo, fhi))) if prune =>
+          case (Some(lo), Some(hi), Some((flo, fhi))) =>
             hi < flo || lo > fhi
           case _ => false
         }
@@ -3326,8 +3323,10 @@ class CowOptimizeProcedure(catalogName: String) extends UnboundProcedure {
         // rows compact through the selection vector — and feeds the
         // router one batch-row view at a time (the router extracts
         // values per write call, so the mutable view is safe to reuse).
-        // The knob is resolved on the DRIVER so the A/B flag composes
-        // with executor closures.
+        // `-Dgraft.cow.columnar=false` (the spec reference path) sends
+        // bins through the per-row Group walk like every other catalog
+        // read; it is read on the DRIVER so the closure carries the
+        // driver's choice to the executors.
         val vectorized = !sys.props.get("graft.cow.columnar").contains("false")
         val rewritten = spark.sparkContext
           .parallelize(bins, bins.size)
@@ -5309,7 +5308,9 @@ class CowScan(tableName: String, state: CowStore.State,
         * estimate can now flip a join to broadcast (spec-pinned).
         * Estimates ignore delete vectors / equality deletes (upper
         * bounds — the CBO contract is estimation, not exactness).
-        * `-Dgraft.cow.colstats=false` is the spec's A/B knob.
+        * `-Dgraft.cow.colstats=false` withholds the stats: specs
+        * plan the same query without them as the reference the
+        * stats-driven plan is compared against.
         */
       override def columnStats(): java.util.Map[NamedReference,
           org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = {
@@ -5589,8 +5590,9 @@ class CowScan(tableName: String, state: CowStore.State,
   // columnar reader compacts survivors through a selection vector
   // (round-16 verdict's one weak mark), so Spark's per-scan columnar
   // agreement holds trivially (every partition answers `true`).
-  // `-Dgraft.cow.columnar=false` is CatScanProbe's A/B knob, not a
-  // supported config.
+  // `-Dgraft.cow.columnar=false` selects the per-row Group walk: not a
+  // supported config, but the reference path specs read through to
+  // check the vectorized one.
   override def createReaderFactory(): PartitionReaderFactory =
     CowReaderFactory(required, state.schema,
       columnar = !sys.props.get("graft.cow.columnar").contains("false"),

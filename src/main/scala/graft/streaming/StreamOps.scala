@@ -2506,7 +2506,8 @@ object StreamOps extends Serializable {
     * batch-side from the same expressions (bit-identical by
     * construction); only the band verdicts carry stream state.
     *
-    * SCALING (round-14 fix, measured by [[graft.StreamScaleProbe]]): the
+    * SCALING (round-14 fix; numbers in BASELINE.md "Streaming partition
+    * scaling"): the
     * staged replay writes each tick as ONE single-row-group parquet file,
     * and a one-row-group file is a SEQUENTIAL scan no matter how many
     * byte-range splits the scheduler makes — so without intervention the
@@ -2924,7 +2925,8 @@ object StreamOps extends Serializable {
     * The round-12 stress table's 260 k → 263 k rows/s plateau from
     * ×10 → ×40 is a LINEAR WALL AT FIXED PARALLELISM, and
     * [[startWithStatePartitions]] is the designed knob: measured at ×40
-    * (4 M events, [[graft.StreamScaleProbe]], noop sink), 8 state
+    * (4 M events, noop sink; BASELINE.md "Streaming partition
+    * scaling"), 8 state
     * partitions serve 554 k rows/s and 32 partitions 790 k rows/s
     * (×1.43) — at ×10 the same move LOSES (488 k → 388 k rows/s: more
     * per-partition store opens than the batch amortizes). Partitions
@@ -3227,7 +3229,7 @@ object StreamOps extends Serializable {
     // matters most for — 32 partitions measured 3.8× slower than 8 on
     // the fixture, and the 4 used here shaves the store overhead further.
     // Swept round 15 (BASELINE.md "Streaming partition scaling",
-    // graft.StreamScaleProbe join mode): 4 WINS at ×10 (133k vs 90k
+    // q_stream_join table): 4 WINS at ×10 (133k vs 90k
     // rows/s at 32) and LOSES at ×40 (194k vs 321k) — partitions follow
     // STATE VOLUME, so the fixture-scale query keeps 4 and a production
     // deployment with ×40-sized join state passes a wider n here.

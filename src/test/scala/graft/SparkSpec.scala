@@ -3,27 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites — one JVM-wide session (matching the
-  * driver's Verify/Bench session config) so the suite doesn't pay session
-  * boot per test class.
+/** Shared local session for all suites — one JVM-wide session, built
+  * like the mains' ([[GraftSession.builder]]), so the suite doesn't pay
+  * session boot per test class.
   */
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // Same session contract as Verify/Bench: the extension installs the
-    // functions/strategy (else GraftExtensions.register does it lazily)
-    // and the MERGE WITH SCHEMA EVOLUTION parser surface.
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    // Fork-free local FS (round 20) - same session contract as Verify/Bench.
-    .config("spark.hadoop.fs.file.impl",
-      "graft.hadoop.GraftLocalFileSystem")
-    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-      "graft.hadoop.GraftLocalFs")
-    .getOrCreate()
+  lazy val session: SparkSession =
+    GraftSession.builder("4").appName("graft-tests").getOrCreate()
 
   /** Smallest fixture scale — correctness shape, not volume. */
   val sfDir = "/root/testdata/sf0.001"
