@@ -40,7 +40,8 @@ object Bench {
     // single-shot numbers on a shared box carry ±2x scheduler noise.
     // A failed query yields None — logged to stderr and EXCLUDED from the
     // per-query map and total, instead of silently contributing its
-    // time-to-exception to the suite number.
+    // time-to-exception to the suite number; a query that failed both
+    // passes is named in the artifact's "failed" list.
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       // Label the jobs (guide §1.5) and reset the concurrency high-water
       // mark to the in-flight count (normally 0 between queries).
@@ -96,10 +97,13 @@ object Bench {
       staged(name)(stage(spark, sfDir))
     }
     val pass1 = ordered.map { case (n, f) => n -> timeOnce(n, f) }.toMap
-    val results = ordered.flatMap { case (n, f) =>
-      val best = (pass1(n).toSeq ++ timeOnce(n, f).toSeq)
-      if (best.isEmpty) None else Some(n -> best.min)
-    } ++ stagingTimes
+    val best = ordered.map { case (n, f) =>
+      n -> (pass1(n).toSeq ++ timeOnce(n, f).toSeq)
+    }
+    val results = best.collect { case (n, t) if t.nonEmpty => n -> t.min } ++
+      stagingTimes
+    val failed = best.collect { case (n, t) if t.isEmpty => s"\"$n\"" }
+      .sorted.mkString("[", ",", "]")
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // _stage_* pseudo-entries are reported but never counted in the suite
@@ -111,7 +115,7 @@ object Bench {
     // launch command — self-describing artifacts make that impossible.
     val par = parallelism.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"parallelism":$par,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"parallelism":$par,"failed":$failed,"sf":"$sfDir"}"""
     println(line)
     // The driver captures the tail of stdout and has truncated the head of
     // this (long) line in past rounds; persist the full artifact to a file

@@ -3,8 +3,6 @@ package graft.sources
 import java.util.concurrent.ConcurrentHashMap
 import java.util.{Collections => JCollections, UUID}
 
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.io.api.RecordConsumer
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.catalyst.InternalRow
@@ -1554,10 +1552,11 @@ object CowStore {
     */
   private def nowUs(): Long = System.currentTimeMillis() * 1000L
 
-  /** The parquet schema every equality-delete file is written (and
-    * read) under: one required canonical-string `key` column.
+  /** The parquet schema every equality-delete file is written under:
+    * one required canonical-string `key` column ([[CowEqDeleteFiles]]
+    * reads it back).
     */
-  private[sources] val EqDeleteFileSchema: String =
+  private val EqDeleteFileSchema: String =
     "message graft_eqdel { required binary key (UTF8); }"
 
   /** Write one equality-delete parquet file under the table dir —
@@ -3318,37 +3317,24 @@ class CowOptimizeProcedure(catalogName: String) extends UnboundProcedure {
         // AND migrates pre-evolution partition layouts to the current
         // spec (the Iceberg rewrite_data_files contract; a bin from an
         // old spec fans out to its rows' current-spec partitions).
-        // VECTORIZED bin decode (round 17): compaction reads through the
-        // same columnar reader the scans use — DV'd and equality-deleted
-        // rows compact through the selection vector — and feeds the
-        // router one batch-row view at a time (the router extracts
-        // values per write call, so the mutable view is safe to reuse).
-        // `-Dgraft.cow.columnar=false` (the spec reference path) sends
-        // bins through the per-row Group walk like every other catalog
-        // read; it is read on the DRIVER so the closure carries the
-        // driver's choice to the executors.
-        val vectorized = !sys.props.get("graft.cow.columnar").contains("false")
+        // Bins decode through the same columnar reader the scans use —
+        // DV'd and equality-deleted rows compact through the selection
+        // vector — and feed the router one batch-row view at a time (the
+        // router extracts values per write call, so the mutable view is
+        // safe to reuse).
         val rewritten = spark.sparkContext
           .parallelize(bins, bins.size)
           .map { bin =>
             val out = new CowTaskRouter(dir, schema, schema, curSpec, curSpecId)
-            val rf = CowReaderFactory(schema, schema, columnar = vectorized,
-              defaults = curDefaults)
+            val rf = CowReaderFactory(schema, schema, defaults = curDefaults)
             bin.files.foreach { case (f, cols, dv, cm, ec, ef) =>
-              val part = CowFilePartition(f, cols, dv, cm,
-                eqCol = ec, eqFiles = ef)
-              if (vectorized) {
-                val r = rf.columnarReader(part, keepOnly = null,
-                  consts = Map.empty, metrics = false)
-                try while (r.next()) {
-                  val it = r.get().rowIterator()
-                  while (it.hasNext) out.write(it.next(), 0)
-                } finally r.close()
-              } else {
-                val r = rf.createReader(part)
-                try while (r.next()) out.write(r.get(), 0)
-                finally r.close()
-              }
+              val r = rf.columnarReader(
+                CowFilePartition(f, cols, dv, cm, eqCol = ec, eqFiles = ef),
+                keepOnly = null, consts = Map.empty, metrics = false)
+              try while (r.next()) {
+                val it = r.get().rowIterator()
+                while (it.hasNext) out.write(it.next(), 0)
+              } finally r.close()
             }
             (out.finish(), bin.files.map(_._1))
           }
@@ -4153,7 +4139,6 @@ class CowChangesScan(tableName: String, st: CowStore.State,
 
   override def createReaderFactory(): PartitionReaderFactory =
     CowChangesReaderFactory(out, st.schema,
-      columnar = !sys.props.get("graft.cow.columnar").contains("false"),
       defaults = CowStore.defaultsFor(st.snapshot))
 }
 
@@ -4296,7 +4281,6 @@ class CowChangesMicroBatchStream(catalog: String, ident: Identifier,
 
   override def createReaderFactory(): PartitionReaderFactory =
     CowChangesReaderFactory(out, state.schema,
-      columnar = !sys.props.get("graft.cow.columnar").contains("false"),
       defaults = CowStore.defaultsFor(state.snapshot))
 
   override def commit(end: Offset): Unit = ()
@@ -4313,22 +4297,16 @@ case class CowChangesPartition(file: String, presentCols: Vector[String],
                                colMap: Map[String, String] = Map.empty)
     extends InputPartition
 
-/** Reads a change partition by delegating decode to the ordinary file
-  * reader ([[CowReaderFactory]] semantics: projection pushdown is
-  * skipped — change feeds are consumed whole — but schema evolution and
-  * position accounting are identical) and appending the change metadata
-  * columns. `columnar = true` (the default route from both the batch
-  * `.changes` relation and the streaming change feed) rides the shared
-  * vectorized path: insert records pass parquet vectors through,
-  * delete records compact the keep-list's positions through the same
-  * selection vector the DV'd batch scan uses, and `_change_type` /
-  * `_commit_version` ride as whole-partition constant vectors. The row
-  * path below stays as the A/B baseline: `keepOnly` runs the same
-  * monotone merge-walk as DV filtering, inverted, with early exit once
-  * the position list is exhausted.
+/** Reads a change partition through the ordinary file reader
+  * ([[CowReaderFactory.columnarReader]]: schema evolution and position
+  * accounting are identical; change feeds are consumed whole) and
+  * appends the change metadata columns. Insert records pass the parquet
+  * vectors through; delete records serve exactly the partition's
+  * `positions` through the same selection vector the DV'd batch scan
+  * uses, stopping once the list is exhausted; `_change_type` /
+  * `_commit_version` ride as whole-partition constant vectors.
   */
 case class CowChangesReaderFactory(out: StructType, tableSchema: StructType,
-                                   columnar: Boolean = false,
                                    // The feed serves the pinned end
                                    // state's schema — and its initial
                                    // defaults: a replica rebuilt from
@@ -4339,14 +4317,12 @@ case class CowChangesReaderFactory(out: StructType, tableSchema: StructType,
                                    defaults: Map[String, String] = Map.empty)
     extends PartitionReaderFactory {
 
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnar
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val part = partition.asInstanceOf[CowChangesPartition]
-    CowReaderFactory(out, tableSchema, columnar = true,
-      defaults = defaults).columnarReader(
+    CowReaderFactory(out, tableSchema, defaults = defaults).columnarReader(
       CowFilePartition(part.file, part.presentCols, Array.empty, part.colMap),
       keepOnly = if (part.keepOnly) part.positions else null,
       consts = Map(
@@ -4355,49 +4331,9 @@ case class CowChangesReaderFactory(out: StructType, tableSchema: StructType,
       metrics = false)
   }
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val part = partition.asInstanceOf[CowChangesPartition]
-    val dataSchema = StructType(out.fields.dropRight(2))
-    // No delete vector on the inner reader: the wrapper does its own
-    // position accounting over the file's PHYSICAL rows.
-    val inner = CowReaderFactory(dataSchema, tableSchema,
-        defaults = defaults)
-      .createReader(CowFilePartition(part.file, part.presentCols,
-        Array.empty, part.colMap))
-    val ct = UTF8String.fromString(part.changeType)
-
-    new PartitionReader[InternalRow] {
-      private var pos = -1L
-      private var pi = 0
-
-      override def next(): Boolean = {
-        while (inner.next()) {
-          pos += 1
-          if (!part.keepOnly) return true
-          else if (pi < part.positions.length && part.positions(pi) == pos) {
-            pi += 1
-            return true
-          } else if (pi >= part.positions.length) return false // early exit
-        }
-        false
-      }
-
-      override def get(): InternalRow = {
-        val base = inner.get()
-        val vals = new Array[Any](out.fields.length)
-        var i = 0
-        while (i < dataSchema.fields.length) {
-          vals(i) = base.get(i, dataSchema.fields(i).dataType)
-          i += 1
-        }
-        vals(i) = ct
-        vals(i + 1) = part.version
-        new GenericInternalRow(vals)
-      }
-
-      override def close(): Unit = inner.close()
-    }
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "graft-cow: graft_cow reads are columnar; use createColumnarReader")
 }
 
 /** The `_file` metadata column — the GROUP identity of the copy-on-write
@@ -5585,17 +5521,8 @@ class CowScan(tableName: String, state: CowStore.State,
       }
     }.toArray
   }
-  // VECTORIZED for every batch scan: delete vectors and equality
-  // deletes no longer demote the scan to the per-row Group walk — the
-  // columnar reader compacts survivors through a selection vector
-  // (round-16 verdict's one weak mark), so Spark's per-scan columnar
-  // agreement holds trivially (every partition answers `true`).
-  // `-Dgraft.cow.columnar=false` selects the per-row Group walk: not a
-  // supported config, but the reference path specs read through to
-  // check the vectorized one.
   override def createReaderFactory(): PartitionReaderFactory =
     CowReaderFactory(required, state.schema,
-      columnar = !sys.props.get("graft.cow.columnar").contains("false"),
       defaults = CowStore.defaultsFor(state.snapshot))
 
   override def toMicroBatchStream(
@@ -5777,7 +5704,6 @@ class CowMicroBatchStream(catalog: String, ident: Identifier,
 
   override def createReaderFactory(): PartitionReaderFactory =
     CowReaderFactory(required, state.schema,
-      columnar = !sys.props.get("graft.cow.columnar").contains("false"),
       defaults = CowStore.defaultsFor(state.snapshot))
 
   override def commit(end: Offset): Unit = ()
@@ -5884,14 +5810,14 @@ object CowEqDeleteFiles {
 
   /** The canonical-string keys of one delete file (cached). */
   def keys(path: String): Array[String] = cached(fileCache, path) {
-    val reader = CowParquet.groupReader(path, CowStore.EqDeleteFileSchema)
+    val reader = CowParquet.vectorizedReader(path,
+      StructType(Seq(StructField("key", StringType))))
     val out = Array.newBuilder[String]
-    try {
-      var g = reader.read()
-      while (g != null) {
-        out += g.getString("key", 0)
-        g = reader.read()
-      }
+    try while (reader.nextBatch()) {
+      val batch = reader.resultBatch()
+      val v = batch.column(0)
+      var i = 0
+      while (i < batch.numRows()) { out += v.getUTF8String(i).toString; i += 1 }
     } finally reader.close()
     out.result()
   }
@@ -5918,40 +5844,23 @@ object CowEqDeleteFiles {
     }
 }
 
-/** Executor-side parquet reader over one immutable file, projection
-  * pushed to parquet-mr so unrequested columns' pages are never decoded.
-  * Serves the `_file`/`_pos` metadata columns, synthesizes NULL for
-  * columns added after the file was written, and applies the file's
-  * positional delete vector as a MONOTONE MERGE-WALK (positions are
-  * sorted, rows stream in position order ⇒ O(1) per row, no set
-  * lookups).
-  *
-  * TWO DECODE PATHS. `columnar = true` (every batch scan, the streaming
-  * table source and the change feed) serves Spark's own
-  * `ColumnarBatch`es through
-  * [[org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader]]:
-  * pages decode straight into column vectors, metadata/added columns
-  * ride as constant vectors beside them, and the scan feeds
-  * whole-stage codegen batch-at-a-time — the same machinery Spark's
-  * native parquet source uses. Files carrying delete vectors or live
-  * equality deletes stay vectorized too: survivors are compacted
-  * through a per-batch selection vector ([[columnarReader]]), so one
-  * deleted row no longer demotes a whole scan to the row walk (the
-  * round-16 verdict's weak mark). Both paths open the file from the
-  * shared per-JVM Hadoop conf ([[CowParquet]]); the vectorized reader is
-  * split-initialised from a copy of it carrying the requested schema.
-  * The per-row Group walk remains behind `-Dgraft.cow.columnar=false`,
-  * as the reference read specs hold the vectorized path to, and for the
-  * compaction reader's internal use.
+/** Executor-side parquet reader over one immutable file: Spark's
+  * `VectorizedParquetRecordReader` ([[CowParquet.vectorizedReader]])
+  * decodes only the requested columns' pages straight into column
+  * vectors, and the scan feeds whole-stage codegen batch-at-a-time.
+  * Serves the `_file`/`_pos` metadata columns and columns added after
+  * the file was written as constant vectors beside the parquet ones,
+  * and applies the file's positional delete vector and equality deletes
+  * by compacting survivors through a per-batch selection vector
+  * ([[columnarReader]]). Every scan, the streaming table source, the
+  * change feed and compaction read through it.
   */
 case class CowReaderFactory(schema: StructType, tableSchema: StructType,
-                            columnar: Boolean = false,
-                            // INITIAL DEFAULTS (round 19), CURRENT
-                            // column name → canonical value string:
-                            // served — typed — for columns whose
-                            // IDENTITY a file lacks (pre-ADD files);
-                            // a present column's genuine NULLs stay
-                            // NULL.
+                            // INITIAL DEFAULTS, CURRENT column name →
+                            // canonical value string: served — typed —
+                            // for columns whose IDENTITY a file lacks
+                            // (pre-ADD files); a present column's
+                            // genuine NULLs stay NULL.
                             defaults: Map[String, String] = Map.empty)
     extends PartitionReaderFactory {
 
@@ -5991,29 +5900,27 @@ case class CowReaderFactory(schema: StructType, tableSchema: StructType,
       else part.physOf(f.name).map(f -> _)
     }
 
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnar
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     columnarReader(dataPart(partition), keepOnly = null, consts = Map.empty,
       metrics = true)
 
-  /** The vectorized decode path, shared by the batch scan (plain AND
-    * delete-carrying files), the streaming table source and the change
-    * feed. Two assembly modes:
+  /** The one decode path, shared by the batch scan (plain AND
+    * delete-carrying files), the streaming table source, the change feed
+    * and compaction. Two assembly modes:
     *
     *  - UNFILTERED (no DV, no equality deletes, no keep-list): parquet
     *    vectors pass through untouched — zero copies.
     *  - FILTERED: survivors are COMPACTED into on-heap output vectors
     *    through a per-batch selection vector (what the Iceberg/Delta
     *    vectorized readers do; materialized as a copy because Spark's
-    *    `ColumnarBatch` carries no selection mask). The DV merge-walk
-    *    and equality-key set probe pick survivors exactly like the row
-    *    path; each required column then copies its `m` survivors
-    *    batch-at-a-time — branch-light long/double/byte copies, still
-    *    vector decode underneath, so one deleted row no longer demotes
-    *    a whole scan to the per-row Group walk.
+    *    `ColumnarBatch` carries no selection mask). A monotone
+    *    merge-walk over the sorted delete vector and the equality-key set
+    *    probe pick survivors; each required column then copies its `m`
+    *    survivors batch-at-a-time — branch-light long/double/byte copies,
+    *    still vector decode underneath.
     *
     * `keepOnly` (sorted positions, or null) INVERTS the filter for the
     * change feed's delete records: serve exactly these positions, stop
@@ -6029,7 +5936,7 @@ case class CowReaderFactory(schema: StructType, tableSchema: StructType,
     val phys0 = physicalFields(part)
     // EQUALITY DELETES need the key column decoded even when the
     // projection doesn't ask for it (the drop test reads every row's
-    // key); same sentinel ride-along as the row path.
+    // key); it rides along under a sentinel field.
     val eqPhysName: String =
       if (part.hasEq) part.physOf(part.eqCol).getOrElse("") else ""
     val phys: Array[(StructField, String)] =
@@ -6041,26 +5948,11 @@ case class CowReaderFactory(schema: StructType, tableSchema: StructType,
     val filtered = dv.nonEmpty || part.hasEq || keepOnly != null
 
     new PartitionReader[ColumnarBatch] {
-      private val Capacity = 4096
-      // CORRECTED rebase + no tz conversion: the writer emits modern
-      // adjusted-to-UTC epoch micros verbatim (no legacy calendars).
-      private val rr =
-        new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
-          null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, Capacity)
-      // Opened from a copy of the shared conf (the path overload parses a
-      // fresh one per file). The requested schema names the physical
-      // columns in `phys` order, typed as the writer laid them out.
-      locally {
-        val conf = CowParquet.vectorizedConf(StructType(phys.map {
-          case (f, p) => StructField(p, f.dataType) }))
-        val path = new org.apache.hadoop.fs.Path(part.file)
-        val len = path.getFileSystem(conf).getFileStatus(path).getLen
-        rr.initialize(
-          new org.apache.hadoop.mapred.FileSplit(path, 0L, len, Array.empty[String]),
-          new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-            conf, new org.apache.hadoop.mapreduce.TaskAttemptID()))
-      }
-      rr.initBatch(new StructType(), new GenericInternalRow(0))
+      private val Capacity = CowParquet.BatchRows
+      // The requested schema names the physical columns in `phys` order,
+      // typed as the writer laid them out.
+      private val rr = CowParquet.vectorizedReader(part.file,
+        StructType(phys.map { case (f, p) => StructField(p, f.dataType) }))
       private val parquetBatch = rr.resultBatch()
       private var wrapped: ColumnarBatch = _
       private var posVec: OnHeapColumnVector = _
@@ -6100,8 +5992,8 @@ case class CowReaderFactory(schema: StructType, tableSchema: StructType,
       // Output columns map to the parquet batch's vectors by NAME;
       // `_file`, feed constants and added-after-write columns are
       // constant vectors, and `_pos` is refilled per batch (rows stream
-      // in physical position order — the same invariant the row path's
-      // merge-walk relies on).
+      // in physical position order — the same invariant the delete
+      // vector's merge-walk relies on).
       private def buildWrapper(): ColumnarBatch = {
         // Required name → parquet batch index VIA the field-id-resolved
         // physical name (a physical name can coincide with a required
@@ -6262,143 +6154,9 @@ case class CowReaderFactory(schema: StructType, tableSchema: StructType,
     }
   }
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val part = dataPart(partition)
-    val file = part.file
-    val dv = part.deletes
-
-    // Metadata columns are synthesized per partition, never decoded from
-    // parquet; columns missing from THIS file (added after it was
-    // written, or an identity the file lacks post-rename) read NULL.
-    // Parquet sees each column's PHYSICAL (write-time) name.
-    val phys0 = physicalFields(part)
-
-    // EQUALITY DELETES need the key column decoded even when the
-    // projection doesn't ask for it (the drop test reads every row's
-    // key); ride it into the parquet projection under a sentinel field.
-    val eqPhysName: String =
-      if (part.hasEq) part.physOf(part.eqCol).getOrElse("") else ""
-    val phys: Array[(StructField, String)] =
-      if (eqPhysName.nonEmpty && !phys0.exists(_._2 == eqPhysName))
-        phys0 :+ (tableSchema.fields.find(_.name == part.eqCol).get
-          .copy(name = "\u0000eqkey") -> eqPhysName)
-      else phys0
-
-    val parquetProjection: String =
-      phys.map { case (f, physName) =>
-        val t = f.dataType match {
-          case LongType      => "int64"
-          case DoubleType    => "double"
-          case StringType    => "binary"
-          case TimestampType => "int64"
-          case other => throw new IllegalArgumentException(
-            s"graft-cow: unsupported column type ${other.simpleString} for ${f.name}")
-        }
-        val ann = if (f.dataType == TimestampType) " (TIMESTAMP(MICROS,true))" else ""
-        s"  optional $t $physName$ann;"
-      }.mkString("message graft_cow_projection {\n", "\n", "\n}")
-
-    // Required field → its physical name in this file, null = serve NULL
-    // (the equality-key ride-along maps to no required field).
-    val physNames: Array[String] = {
-      val m = phys.map { case (f, p) => f.name -> p }.toMap
-      schema.fields.map(f => m.getOrElse(f.name, null))
-    }
-
-    new PartitionReader[InternalRow] {
-      private val reader: ParquetReader[Group] =
-        CowParquet.groupReader(file, parquetProjection)
-      private var current: Group = _
-      private var pos = -1L // physical position of `current` within the file
-      private var di = 0    // merge-walk pointer into the sorted delete vector
-      private var eqDropped = 0L
-      private var served = 0L
-
-      // Equality-delete membership sets, from the cached delete files
-      // (this A/B-baseline row path compares parquet Group values, so
-      // the string set stays java.lang.String).
-      private val eqIsLong: Boolean =
-        part.hasEq && tableSchema.fields.find(_.name == part.eqCol)
-          .exists(_.dataType == LongType)
-      private val eqLongSet: java.util.HashSet[java.lang.Long] =
-        if (!part.hasEq || !eqIsLong) null
-        else {
-          val h = new java.util.HashSet[java.lang.Long]()
-          part.eqFiles.foreach(p =>
-            CowEqDeleteFiles.keys(p).foreach(v => h.add(v.toLong): Unit))
-          h
-        }
-      private val eqStrSet: java.util.HashSet[String] =
-        if (!part.hasEq || eqIsLong) null
-        else {
-          val h = new java.util.HashSet[String]()
-          part.eqFiles.foreach(p =>
-            CowEqDeleteFiles.keys(p).foreach(v => h.add(v): Unit))
-          h
-        }
-
-      private def eqDeleted(g: Group): Boolean = {
-        if (eqPhysName.isEmpty || (eqLongSet == null && eqStrSet == null))
-          return false
-        val i = g.getType.getFieldIndex(eqPhysName)
-        if (g.getFieldRepetitionCount(i) == 0) return false // NULL key: kept
-        if (eqLongSet != null) eqLongSet.contains(g.getLong(i, 0))
-        else eqStrSet.contains(g.getString(i, 0))
-      }
-
-      override def next(): Boolean = {
-        while (true) {
-          current = reader.read()
-          if (current == null) return false
-          pos += 1
-          if (di < dv.length && dv(di) == pos) di += 1 // deleted: skip row
-          else if (eqDeleted(current)) eqDropped += 1  // keyed delete: skip
-          else { served += 1; return true }
-        }
-        false
-      }
-
-      override def currentMetricsValues(): Array[
-          org.apache.spark.sql.connector.metric.CustomTaskMetric] = Array(
-        new org.apache.spark.sql.connector.metric.CustomTaskMetric {
-          override def name(): String = "dvSkippedRows"
-          override def value(): Long = di + eqDropped
-        },
-        new org.apache.spark.sql.connector.metric.CustomTaskMetric {
-          override def name(): String = "rowsServed"
-          override def value(): Long = served
-        })
-
-      private val filePath = UTF8String.fromString(file)
-
-      override def get(): InternalRow = {
-        val g = current
-        def has(name: String): Boolean = {
-          val i = g.getType.getFieldIndex(name)
-          g.getFieldRepetitionCount(i) > 0
-        }
-        new GenericInternalRow(schema.fields.indices.map[Any] { fi =>
-          val f = schema.fields(fi)
-          val p = physNames(fi) // physical name; null = no such identity here
-          if (f.name == CowFileColumn.Name) filePath
-          else if (f.name == CowPosColumn.Name) pos
-          // Identity absent (added after this file / renamed away):
-          // the initial default, or NULL without one.
-          else if (p == null) defaultValueOf(f)
-          else if (!has(p)) null
-          else f.dataType match {
-            case LongType | TimestampType =>
-              g.getLong(g.getType.getFieldIndex(p), 0)
-            case DoubleType => g.getDouble(g.getType.getFieldIndex(p), 0)
-            case StringType =>
-              UTF8String.fromString(g.getString(g.getType.getFieldIndex(p), 0))
-          }
-        }.toArray)
-      }
-
-      override def close(): Unit = reader.close()
-    }
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "graft-cow: graft_cow reads are columnar; use createColumnarReader")
 }
 
 /** Append by default; `truncate()` (INSERT OVERWRITE) replaces every

@@ -2,22 +2,19 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.conf.HadoopParquetConfiguration
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.api.{InitContext, ReadSupport, WriteSupport}
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.hadoop.{ParquetInputFormat, ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.{ParquetInputFormat, ParquetWriter}
 import org.apache.parquet.io.api.RecordConsumer
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Parquet plumbing shared by the `graft_cow` catalog and the replay
   * source: the one Hadoop conf every file is opened from, the row writer
-  * and the Group reader.
+  * and the one reader, Spark's `VectorizedParquetRecordReader`.
   */
 private[sources] object CowParquet {
 
@@ -27,6 +24,9 @@ private[sources] object CowParquet {
     * Never mutated: a reader that needs extra keys takes a copy.
     */
   lazy val conf: Configuration = new Configuration()
+
+  /** Rows per `ColumnarBatch` the reader serves. */
+  val BatchRows = 4096
 
   /** A writer of flat `schema` records, one per `InternalRow`: `fill`
     * sends the row's non-null fields straight to parquet's
@@ -39,25 +39,19 @@ private[sources] object CowParquet {
     new RowWriterBuilder(new Path(file), new RowWriteSupport(schema, fill))
       .withConf(conf).build()
 
-  /** A Group reader over `file`, decoding only the columns of the
-    * parquet `projection` message.
+  /** The batch reader over all of `file`, decoding only the `requested`
+    * columns: each field names a physical column of the file, typed as it
+    * was written, and the batch serves them in this order (a requested
+    * column the file lacks reads NULL). An empty `requested` decodes no
+    * column and only counts rows. Timestamps are read as written
+    * (CORRECTED rebase, no time-zone shift): every writer here emits
+    * adjusted-to-UTC epoch micros. The reader is split-initialised from a
+    * copy of [[conf]] carrying the five flags its path overload would
+    * set, so no file parses a conf of its own.
     */
-  def groupReader(file: String, projection: String): ParquetReader[Group] = {
-    val support = new GroupReadSupport {
-      override def init(ctx: InitContext): ReadSupport.ReadContext =
-        new ReadSupport.ReadContext(
-          ReadSupport.getSchemaForRead(ctx.getFileSchema, projection))
-    }
-    new GroupReaderBuilder(HadoopInputFile.fromPath(new Path(file), conf), support)
-      .build()
-  }
-
-  /** The conf for `VectorizedParquetRecordReader.initialize(split, ctx)`:
-    * a copy of [[conf]] with the five flags its path overload sets, plus
-    * Spark's read support and the requested schema (`requested` names
-    * the file's physical columns, in the order the batch serves them).
-    */
-  def vectorizedConf(requested: StructType): Configuration = {
+  def vectorizedReader(file: String, requested: StructType): VectorizedParquetRecordReader = {
+    val rr = new VectorizedParquetRecordReader(
+      null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, BatchRows)
     val c = new Configuration(conf)
     c.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, false)
     c.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, false)
@@ -66,7 +60,16 @@ private[sources] object CowParquet {
     c.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, false)
     c.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
     c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
-    c
+    val path = new Path(file)
+    val len = path.getFileSystem(c).getFileStatus(path).getLen
+    try {
+      rr.initialize(
+        new org.apache.hadoop.mapred.FileSplit(path, 0L, len, Array.empty[String]),
+        new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+          c, new org.apache.hadoop.mapreduce.TaskAttemptID()))
+      rr.initBatch(new StructType(), new GenericInternalRow(0))
+    } catch { case e: Throwable => rr.close(); throw e }
+    rr
   }
 
   private final class RowWriteSupport(schema: MessageType,
@@ -88,12 +91,5 @@ private[sources] object CowParquet {
       extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](path) {
     override def self(): RowWriterBuilder = this
     override def getWriteSupport(c: Configuration): WriteSupport[InternalRow] = support
-  }
-
-  // The (ReadSupport, Path) builder builds a fresh conf of its own; the
-  // InputFile one takes ours.
-  private final class GroupReaderBuilder(in: HadoopInputFile, support: ReadSupport[Group])
-      extends ParquetReader.Builder[Group](in, new HadoopParquetConfiguration(conf)) {
-    override def getReadSupport(): ReadSupport[Group] = support
   }
 }

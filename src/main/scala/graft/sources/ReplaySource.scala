@@ -1,18 +1,15 @@
 package graft.sources
 
 import graft.streaming.StreamOps
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import java.util.{Collections => JCollections}
 
 /** DataSource V2 micro-batch source over a staged replay directory
@@ -34,16 +31,15 @@ import java.util.{Collections => JCollections}
   * structurally.
   *
   * Scale design: one `InputPartition` per file — each executor opens its
-  * own file via the parquet-hadoop reader, nothing flows through the
-  * driver (the driver only LISTS the directory). Admission control
+  * own file via Spark's vectorized parquet reader, nothing flows through
+  * the driver (the driver only LISTS the directory). Admission control
   * (`maxFilesPerTrigger`) and `Trigger.AvailableNow` are first-class:
   * the batch size is bounded per tick, and AvailableNow drains exactly
   * the files present when the query started.
   *
   * Column pruning — two cooperating paths, both ending at the parquet
-  * reader's requested projection (`parquet.read.schema`), so unrequested
-  * columns' pages are never decoded (and at 100 TB, with columnar
-  * storage, mostly never read):
+  * reader's requested schema, so unrequested columns' pages are never
+  * decoded (and at 100 TB, with columnar storage, mostly never read):
   *
   *  1. [[SupportsPushDownRequiredColumns]] on the scan builder — the
   *     DSv2 pushdown contract. Spark 4.1's BATCH planner drives it via
@@ -296,76 +292,35 @@ class ReplayMicroBatchStream(path: String, maxFilesPerTrigger: Option[Int],
   override def stop(): Unit = ()
 }
 
-/** Executor-side reader: parquet-hadoop's example Group API over the one
-  * file of the partition, converted field-by-field into `InternalRow`s of
-  * the (possibly pruned) read schema (ts stays raw int64 nanos —
-  * conversion to a timestamp happens in the query plan, same as the
-  * file-source path).
+/** Executor-side reader: Spark's vectorized parquet reader over the one
+  * file of the partition ([[CowParquet.vectorizedReader]]), serving
+  * `ColumnarBatch`es of the (possibly pruned) read schema — `ts` stays
+  * raw int64 micros; conversion to a timestamp happens in the query
+  * plan, same as the file-source path.
   *
-  * The pruned schema is handed to parquet-mr's read support as its
-  * requested projection, so the reader decodes ONLY the requested
-  * columns' chunks — pruning at the I/O layer, not a post-read
-  * projection. Every micro-batch file opens from the shared per-JVM
-  * Hadoop conf ([[CowParquet.groupReader]]).
+  * The read schema is the reader's requested schema, so it decodes ONLY
+  * the requested columns' pages — pruning at the I/O layer, not a
+  * post-read projection. An empty read schema (Spark pushes
+  * `StructType(Nil)` for count(*)-style scans) decodes no column and
+  * serves column-less batches that only carry a row count. Every
+  * micro-batch file opens from the shared per-JVM Hadoop conf.
   */
 case class ReplayReaderFactory(schema: StructType) extends PartitionReaderFactory {
 
-  /** Columns physically read: a column-less required schema (Spark pushes
-    * StructType(Nil) for count(*)-style scans) still needs ONE parquet
-    * column to drive row iteration — parquet rejects an empty group — so
-    * fall back to the narrowest fixed column and emit empty rows.
-    */
-  private def physicalFields =
-    if (schema.fields.isEmpty) StreamOps.eventsRawSchema.fields.take(1)
-    else schema.fields
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
-  /** The read schema as a parquet projection message. Primitive names and
-    * repetition must match the staged files (Spark writes every column
-    * `optional`); logical annotations are not compared by parquet's
-    * projection check, so `binary` suffices for strings.
-    */
-  private def parquetProjection: String =
-    physicalFields.map { f =>
-      val t = f.dataType match {
-        case LongType   => "int64"
-        case DoubleType => "double"
-        case StringType => "binary"
-        case other => throw new IllegalArgumentException(
-          s"graft-replay: unsupported column type ${other.simpleString} for ${f.name}")
-      }
-      s"  optional $t ${f.name};"
-    }.mkString("message graft_replay_projection {\n", "\n", "\n}")
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val file = partition.asInstanceOf[ReplayFilePartition].file
-    new PartitionReader[InternalRow] {
-      private val reader: ParquetReader[Group] =
-        CowParquet.groupReader(file, parquetProjection)
-      private var current: Group = _
-
-      override def next(): Boolean = {
-        current = reader.read()
-        current != null
-      }
-
-      override def get(): InternalRow = {
-        val g = current
-        def has(name: String): Boolean = {
-          val i = g.getType.getFieldIndex(name)
-          g.getFieldRepetitionCount(i) > 0
-        }
-        new GenericInternalRow(schema.fields.map[Any] { f =>
-          if (!has(f.name)) null
-          else f.dataType match {
-            case LongType   => g.getLong(g.getType.getFieldIndex(f.name), 0)
-            case DoubleType => g.getDouble(g.getType.getFieldIndex(f.name), 0)
-            case StringType =>
-              UTF8String.fromString(g.getString(g.getType.getFieldIndex(f.name), 0))
-          }
-        })
-      }
-
+  override def createColumnarReader(partition: InputPartition)
+      : PartitionReader[ColumnarBatch] = {
+    val reader = CowParquet.vectorizedReader(
+      partition.asInstanceOf[ReplayFilePartition].file, schema)
+    new PartitionReader[ColumnarBatch] {
+      override def next(): Boolean = reader.nextBatch()
+      override def get(): ColumnarBatch = reader.resultBatch()
       override def close(): Unit = reader.close()
     }
   }
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "graft-replay: replay reads are columnar; use createColumnarReader")
 }

@@ -3,11 +3,14 @@ package org.apache.spark.sql.pipelines
 import scala.collection.mutable
 import scala.collection.mutable.ListBuffer
 import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration._
+import scala.concurrent.duration.Duration
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.pipelines.common.FlowStatus
 import org.apache.spark.sql.pipelines.graph._
+import org.apache.spark.sql.pipelines.logging.{FlowProgress, PipelineEvent}
 import org.apache.spark.sql.streaming.Trigger
 
 /** Bridge into Spark 4.1's DECLARATIVE PIPELINES runtime
@@ -29,7 +32,7 @@ import org.apache.spark.sql.streaming.Trigger
   * session catalog (`DatasetManager`), and executes flows with
   * dependency-aware scheduling + retries (`TriggeredGraphExecution`).
   */
-object GraftPipelineBridge {
+object GraftPipelineBridge extends Logging {
 
   /** One declared batch table: `name` materializes in `database` from
     * `sql`, which may reference other declared tables by name — those
@@ -42,6 +45,11 @@ object GraftPipelineBridge {
     * callers can assert scheduling order on. Tables materialize as
     * `spark_catalog.<database>.<name>` parquet tables readable by any
     * follow-up query.
+    *
+    * Failed flows are not retried: the first flow failure fails the
+    * pipeline (the shipped triggered scheduler would retry with backoff
+    * first). There is no wall-clock cap; each flow runs until it
+    * completes or fails.
     */
   def runBatchPipeline(spark: SparkSession, database: String,
                        tables: Seq[TableSpec], storageRoot: String): Seq[String] = {
@@ -75,18 +83,14 @@ object GraftPipelineBridge {
     val events = ListBuffer.empty[String]
     // Flow-completion tracker fed by the SAME event stream callers see:
     // the scheduler below gates downstream starts on the upstream flow's
-    // "has COMPLETED" event having been RECORDED (not merely its future
-    // having fired), so the event log keeps the strict
+    // COMPLETED progress event having been RECORDED (not merely its
+    // future having fired), so the event log keeps the strict
     // completed-before-dependent-runs order the shipped scheduler has.
     val completed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val CompletedMsg = """Flow (\S+) has COMPLETED\.""".r
     val updateCtx = new PipelineUpdateContextImpl(
       unresolvedGraph = graph,
       eventCallback = e => {
-        e.message match {
-          case CompletedMsg(name) => completed.add(name): Unit
-          case _ =>
-        }
+        completedFlow(e).foreach(completed.add(_): Unit)
         events.synchronized { events += e.toString }: Unit
       },
       refreshTables = AllTables,
@@ -95,6 +99,16 @@ object GraftPipelineBridge {
     runTriggeredBatch(updateCtx, completed)
     events.synchronized(events.toList)
   }
+
+  /** The display name of the flow a COMPLETED progress event reports
+    * (the event logger sets the origin's `flowName` to the flow's
+    * `displayName`), read from the event's structured details.
+    */
+  private[pipelines] def completedFlow(e: PipelineEvent): Option[String] =
+    e.details match {
+      case FlowProgress(FlowStatus.COMPLETED) => e.origin.flowName
+      case _ => None
+    }
 
   /** Resolve, materialize and execute a BATCH dataflow graph with
     * millisecond-granularity completion detection.
@@ -152,15 +166,19 @@ object GraftPipelineBridge {
       val done = mutable.Set.empty[TableIdentifier]
       // Future-fired-but-event-unseen grace window: the COMPLETED event is
       // emitted by planAndStartFlow's hook on the flow's own execution
-      // context, normally sub-ms after the future fires. If the event
-      // message format ever drifts from the tracker's pattern, proceed
-      // after the window instead of hanging — ordering parity is then
-      // best-effort for that flow, completion detection is not.
+      // context, normally sub-ms after the future fires. If it never
+      // arrives, proceed after the window with a warning instead of
+      // hanging — ordering parity is then best-effort for that flow,
+      // completion detection is not.
       val firedAt = mutable.Map.empty[TableIdentifier, Long]
       def flowRecorded(id: TableIdentifier, f: ResolvedFlow): Boolean =
         completed.contains(f.displayName) || {
           val t = firedAt.getOrElseUpdate(id, System.nanoTime())
-          (System.nanoTime() - t) > 2L * 1000 * 1000 * 1000
+          val expired = (System.nanoTime() - t) > 2L * 1000 * 1000 * 1000
+          if (expired)
+            logWarning(s"flow ${f.displayName} finished but its COMPLETED " +
+              "event was not seen within 2 s; starting its dependents anyway")
+          expired
         }
       while (done.size < flows.size) {
         val startable = pending.dequeueAll { f =>
@@ -178,11 +196,12 @@ object GraftPipelineBridge {
         // Event-driven wait: wake when ANY running flow's future fires
         // (an already-fired future returns immediately, so the re-check
         // loop below costs ~1 ms per pass while a completion event is
-        // still in flight).
+        // still in flight). Uncapped: each flow future completes or
+        // fails by itself.
         Await.ready(
           Future.firstCompletedOf(running.values.map(_._2.getFuture))(
             ExecutionContext.parasitic),
-          5.minutes): Unit
+          Duration.Inf): Unit
         val finished = running.filter { case (id, (f, fe)) =>
           fe.isCompleted && (fe.exception.nonEmpty || flowRecorded(id, f))
         }

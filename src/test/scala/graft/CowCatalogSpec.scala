@@ -1861,8 +1861,8 @@ class CowCatalogSpec extends SparkSpec {
     // Metadata-only: same files, new schema, same ids.
     assert(st.files == filesBefore, "rename must rewrite nothing")
     assert(st.schema.fieldNames.toSeq == Seq("id", "tag", "score"))
-    // Old files serve the renamed column losslessly (row + columnar
-    // paths both resolve by id), and new writes land under the new name.
+    // Old files serve the renamed column losslessly (the reader resolves
+    // by id), and new writes land under the new name.
     spark.sql(s"INSERT INTO $tbl VALUES (100L, 'x', 777L)")
     val got = spark.sql(s"SELECT id, score FROM $tbl ORDER BY id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -1905,7 +1905,7 @@ class CowCatalogSpec extends SparkSpec {
     assert(intercept[Exception](
       spark.sql(s"ALTER TABLE $tbl RENAME COLUMN score TO v"))
       .toString.contains("DROPPED"))
-    // MOR: renames compose with delete vectors (row-path reader).
+    // MOR: renames compose with delete vectors.
     val mor = fresh("rencol_mor")
     spark.sql(s"CREATE TABLE $mor (id BIGINT, v BIGINT) " +
       "TBLPROPERTIES ('graft.mode' = 'mor')")
@@ -1916,7 +1916,7 @@ class CowCatalogSpec extends SparkSpec {
       (0L until 10L by 2).map(_ * 2).sum)
   }
 
-  test("rename then re-add under a different type: the re-added name reads NULL from old files on both read paths") {
+  test("rename then re-add under another type: the new name reads NULL") {
     val tbl = fresh("renretype")
     spark.sql(s"CREATE TABLE $tbl (a BIGINT) TBLPROPERTIES ('graft.mode' = 'mor')")
     spark.sql(s"INSERT INTO $tbl SELECT id FROM range(0, 10, 1, 1)")
@@ -1932,19 +1932,14 @@ class CowCatalogSpec extends SparkSpec {
       assert(spark.sql(s"SELECT sum(b) FROM $tbl WHERE a IS NULL")
         .head.getLong(0) == sumB)
     }
-    def bothPaths(rows: Long, sumB: Long): Unit = {
-      check(rows, sumB)
-      sys.props("graft.cow.columnar") = "false"
-      try check(rows, sumB) finally sys.props.remove("graft.cow.columnar")
-    }
-    bothPaths(10L, 45L)
+    check(10L, 45L)
     // A delete vector sends the columnar scan through the filtered
     // (selection-vector) assembly with no decoded column.
     spark.sql(s"DELETE FROM $tbl WHERE b = 4")
-    bothPaths(9L, 41L)
+    check(9L, 41L)
   }
 
-  test("vectorized reads: DV-free scans plan columnar batches; a delete vector drops the scan to the row walk; results identical") {
+  test("vectorized reads: every catalog scan is columnar; DV'd rows exact") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     def scanOf(df: org.apache.spark.sql.DataFrame): BatchScanExec = {
@@ -1976,9 +1971,8 @@ class CowCatalogSpec extends SparkSpec {
     assert(rows.length == 20 && rows.forall(_.isNullAt(1)))
     assert(rows.take(2).map(_.getLong(2)).toSeq == Seq(0L, 1L),
       "_pos must count physical rows per file")
-    // A MOR delete vector STAYS columnar (round 17): survivors compact
-    // through the selection vector instead of demoting the whole scan
-    // to the row walk — same results, batch plan.
+    // A MOR delete vector STAYS columnar: survivors compact through
+    // the selection vector.
     val mor = fresh("vec_mor")
     spark.sql(s"CREATE TABLE $mor (id BIGINT, v BIGINT) " +
       "TBLPROPERTIES ('graft.mode' = 'mor')")
@@ -1990,19 +1984,17 @@ class CowCatalogSpec extends SparkSpec {
     assert(scanOf(afterDv).supportsColumnar,
       "a delete vector must no longer demote the scan off the batch path")
     assert(afterDv.collect().head.getLong(0) == 45L - 3L)
-    // The DV'd columnar read serves the same rows, positions and
-    // metadata columns as the row walk over the same snapshot.
-    def dvRows() = spark.sql(
+    // The DV'd read serves every survivor of the table's one file (one
+    // slice, so physical position == id) with its PHYSICAL position:
+    // deleting id=3 keeps positions 4..9.
+    val dvRows = spark.sql(
       s"SELECT id, v, _pos, _file FROM $mor ORDER BY _pos").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
       .toSeq
-    val colRows = dvRows()
-    assert(colRows.map(_._3).contains(4L) && !colRows.map(_._1).contains(3L),
-      "_pos stays the PHYSICAL position: deleting id=3 keeps pos 4..9")
-    sys.props("graft.cow.columnar") = "false"
-    try assert(dvRows() == colRows,
-      "columnar and row-walk reads of a DV'd file must be identical")
-    finally sys.props.remove("graft.cow.columnar")
+    assert(dvRows.map(r => (r._1, r._2, r._3)) ==
+      (0L until 10L).filter(_ != 3L).map(i => (i, i, i)))
+    assert(dvRows.map(_._4).toSet == CowStore.get(cat, identOf(mor)).get.files.toSet,
+      "_file names the table's one data file")
     // Bare count on a DV'd table: the filtered columnar batch with ZERO
     // output columns (no column decoded; rows are only counted).
     assert(spark.table(mor).count() == 9L,
@@ -3977,7 +3969,7 @@ class CowCatalogSpec extends SparkSpec {
     assert(changes(2, 3).forall(_._4 == 3L))
   }
 
-  test("change feed + streaming source read columnar; row-walk A/B identical") {
+  test("change feed + streaming source read columnar; records exact") {
     // The round-17 close of the verdict brief's item 6: the CDF batch
     // relation and the table's streaming source ride the shared
     // vectorized reader (insert records pass vectors through, delete
@@ -3995,15 +3987,12 @@ class CowCatalogSpec extends SparkSpec {
     def rows() = feed().collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3),
         r.getLong(4))).sortBy(t => (t._5, t._4, t._1)).toSeq
-    val colRows = rows()
-    assert(colRows.count(_._4 == "insert") == 20 &&
-      colRows.count(_._4 == "delete") == 2)
-    sys.props("graft.cow.columnar") = "false"
-    try {
-      assert(!feed().queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-      assert(rows() == colRows,
-        "columnar and row-walk change feeds must serve identical records")
-    } finally sys.props.remove("graft.cow.columnar")
+    // v1 inserts every row; v2's delete records carry the deleted rows'
+    // values.
+    def rec(id: Long, change: String, version: Long) =
+      (id, s"t${id % 3}", id * 10, change, version)
+    assert(rows() == (0L until 20L).map(rec(_, "insert", 1L)) ++
+      Seq(3L, 11L).map(rec(_, "delete", 2L)))
     // Streaming table source: one AvailableNow drain, columnar decode.
     val app = fresh("streamvec")
     mkBase(app)

@@ -38,20 +38,45 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 
+  /** Every `.scala` file under `dir` (relative to the repository root),
+    * sorted, with its text.
+    */
+  private def scalaFiles(dir: String): List[(java.nio.file.Path, String)] = {
+    val root = Paths.get(dir)
+    assert(Files.isDirectory(root),
+      s"no $dir/ under ${Paths.get("").toAbsolutePath}: run from the repository root")
+    val stream = Files.walk(root)
+    try stream.iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .map(p => p -> Files.readString(p)).toList.sortBy(_._1.toString)
+    finally stream.close()
+  }
+
   test("no session is built under src/ except through GraftSession") {
     val needle = "SparkSession" + ".builder"
-    val src = Paths.get("src")
-    assert(Files.isDirectory(src),
-      s"no src/ under ${Paths.get("").toAbsolutePath}: run from the repository root")
-    val stream = Files.walk(src)
-    val offenders =
-      try stream.iterator().asScala
-        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
-        .filterNot(_.endsWith(Paths.get("main/scala/graft/GraftSession.scala")))
-        .filter(p => Files.readString(p).contains(needle))
-        .map(_.toString).toList.sorted
-      finally stream.close()
+    val offenders = scalaFiles("src")
+      .filterNot(_._1.endsWith(Paths.get("main/scala/graft/GraftSession.scala")))
+      .collect { case (p, text) if text.contains(needle) => p.toString }
     assert(offenders.isEmpty,
       s"build sessions with GraftSession.builder instead: ${offenders.mkString(", ")}")
+  }
+
+  test("src/main has one parquet decode path and no A/B system property") {
+    // Split so that a grep of src/ for them finds only offenders.
+    val banned = Seq("org.apache.parquet" + ".example", "graft.cow" + ".columnar")
+    // Every system-property read must name its key literally.
+    val propRead = ("""(?:sys\.props(?:\.(?:get|getOrElse|contains|apply))?""" +
+      """|System\.getProperty)\(\s*"([^"]*)"""").r
+    val anyRead = """sys\.props|System\.getPropert""".r
+    val offenders = scalaFiles("src/main").flatMap { case (p, text) =>
+      banned.filter(text.contains).map(b => s"$p: $b") ++
+        propRead.findAllMatchIn(text).map(_.group(1))
+          .filterNot(_ == "graft.cow.colstats").map(k => s"$p: reads $k") ++
+        (if (anyRead.findAllMatchIn(text).size >
+             propRead.findAllMatchIn(text).size)
+           Seq(s"$p: reads system properties without a literal key")
+         else Nil)
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -502,7 +502,7 @@ class StreamingSpec extends SparkSpec {
     }
 
     // 3. A column-less required schema (count(*)-style push) must still
-    //    read: one physical column drives row iteration, rows are empty.
+    //    read: no column is decoded, batches carry only a row count.
     val builder0 = table.newScanBuilder(CaseInsensitiveStringMap.empty())
       .asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns]
     builder0.pruneColumns(StructType(Nil))
@@ -515,11 +515,11 @@ class StreamingSpec extends SparkSpec {
         org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow] match {
           case _ => graft.sources.FileIndexOffset(1)
         })
-    val reader0 = stream0.createReaderFactory().createReader(parts.head)
+    val reader0 = stream0.createReaderFactory().createColumnarReader(parts.head)
     var nRows = 0
     while (reader0.next()) {
-      assert(reader0.get().numFields == 0, "pruned-to-empty rows must have no fields")
-      nRows += 1
+      assert(reader0.get().numCols == 0, "pruned-to-empty batches must have no columns")
+      nRows += reader0.get().numRows
     }
     reader0.close()
     assert(nRows > 0, "empty-projection scan must still iterate the file's rows")

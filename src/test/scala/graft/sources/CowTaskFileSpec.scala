@@ -180,19 +180,19 @@ class CowTaskFileSpec extends SparkSpec {
     val cols = schema.fieldNames.toVector
     // The table gained a column after the file was written: it reads NULL.
     val added = schema.add(StructField("extra", LongType))
-    val afterAdd = CowReaderFactory(added, added, columnar = true)
+    val afterAdd = CowReaderFactory(added, added)
     assert(sameRows(columnarRows(afterAdd, CowFilePartition(file, cols, Array.empty)),
       base.map(_ :+ null)))
     // A projection in another order than the file's.
     val proj = StructType(Seq(schema(3), schema(0)))
     assert(sameRows(
-      columnarRows(CowReaderFactory(proj, schema, columnar = true),
+      columnarRows(CowReaderFactory(proj, schema),
         CowFilePartition(file, cols, Array.empty)),
       base.map(r => Seq(r(3), r(0)))))
     // A delete vector drops exactly its positions.
     val dv = Array(0L, 7L, 40L, 99L)
     assert(sameRows(
-      columnarRows(CowReaderFactory(schema, schema, columnar = true),
+      columnarRows(CowReaderFactory(schema, schema),
         CowFilePartition(file, cols, dv)),
       base.zipWithIndex.collect { case (r, i) if !dv.contains(i.toLong) => r }))
   }

@@ -13,7 +13,8 @@ complete pairs, the pairs the change wins out of all pairs run (a tie, or
 a pair with a failed run, counts for neither side), the parent's IQR, the
 relative change of the median and the metric's bound. A pair is flagged
 when a run did not finish, when the change's run is not correct, or when
-it failed more operations than the parent's. Run from the root of the
+it failed more operations than the parent's. Each run's wall time, its
+build included, is printed beside its seed. Run from the root of the
 checkout under test.
 """
 import argparse
@@ -23,6 +24,7 @@ import shutil
 import subprocess
 import sys
 import tempfile
+import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                                 "perfbench"))
@@ -96,13 +98,16 @@ def parse_seeds(text):
 
 
 def run_once(checkout, workload, seed):
-    """The result line of one run, or an error record."""
+    """The result line of one run, or an error record; either carries the
+    run's wall time, build included, as ``wall_s``."""
+    t0 = time.monotonic()
     r = subprocess.run(RUN + ["--workload", workload, "--seed", str(seed)],
                        cwd=checkout, capture_output=True, text=True)
+    wall = time.monotonic() - t0
     lines = [ln for ln in r.stdout.splitlines() if ln.strip()]
     if r.returncode != 0 or not lines:
-        return {"error": "exit %d: %s" % (r.returncode, r.stderr[-400:])}
-    return json.loads(lines[-1])
+        return {"error": "exit %d: %s" % (r.returncode, r.stderr[-400:]), "wall_s": wall}
+    return dict(json.loads(lines[-1]), wall_s=wall)
 
 
 def export(root, ref, dest):
@@ -153,7 +158,8 @@ def main():
                 pair[side] = run_once(parent_dir if side == "parent" else root,
                                       args.workload, seed)
             print("seed %d (%s first): %s" % (seed, order[0], " ".join(
-                "%s correct=%s failed=%s" % (s, pair[s].get("correct"), pair[s].get("failed"))
+                "%s correct=%s failed=%s wall=%.1fs" % (
+                    s, pair[s].get("correct"), pair[s].get("failed"), pair[s]["wall_s"])
                 if "metrics" in pair[s] else "%s ERROR %s" % (s, pair[s]["error"])
                 for s in ("parent", "change"))), file=sys.stderr, flush=True)
             pairs.append(pair)
